@@ -93,8 +93,8 @@ def test_prom_inf_nan_values(spark):
 
 
 def test_prom_poison_lines_do_not_kill_batch(spark):
-    # unterminated quote, garbage value, missing value, empty name —
-    # each is dropped; the two valid lines land
+    # unterminated quote, garbage value, missing value, empty name, a
+    # null row — each is dropped; the two valid lines land
     _, out = _prom(
         spark,
         [
@@ -104,6 +104,7 @@ def test_prom_poison_lines_do_not_kill_batch(spark):
             'ok{a="b"} 2',
             "{} 5 5",
             'novalue{a="b"}',
+            None,
         ],
     )
     got = sorted((r["name"], r["value"]) for r in out)
@@ -245,7 +246,7 @@ def test_influx_ts_autodetect_magnitudes(spark):
     for raw, want in cases:
         by, _ = _influx(spark, [f"m f=1 {raw}"])
         assert by["m_f"]["ts"] == want, raw
-        # and through the escaped slow path too
+        # and for an escape-bearing line too
         by2, _ = _influx(spark, [f"m,h=a\\ b f=1 {raw}"])
         assert by2["m_f"]["ts"] == want, raw
 
@@ -265,17 +266,32 @@ def test_influx_poison_lines_do_not_kill_batch(spark):
             "noval,h=a f= 1000000",
             "nofields,h=a",
             "tsbad,h=a f=2 notanumber",
+            "under,h=a f=1_000 1000000",
+            "underi,h=a f=1_0i 1000000",
+            # past bigint, and past Python's int-string / double limits
+            "tsbig,h=a f=1 99999999999999999999",
+            "tsneg,h=a f=1 -99999999999999999999",
+            "tshuge,h=a f=1 " + "9" * 5000,
+            "tsms,h=a f=1 -99999999999999999",  # seconds rule: x1000 overflows
+            "ihuge,h=a f=" + "9" * 400 + "i 1000000",
+            "uhuge,h=a f=" + "9" * 5000 + "u 1000000",
             "good2 f=2 2000000",
+            None,
         ],
     )
     got = sorted((r["name"], r["value"]) for r in out)
     assert got == [("good2_f", 2.0), ("good_f", 1.0)]
+    # a named coarse precision scales up: an overflowing product too
+    _, out = _influx(
+        spark, ["big f=1 99999999999999999", "ok f=2 5"], precision="s"
+    )
+    assert [(r["name"], r["ts"]) for r in out] == [("ok_f", 5000)]
 
 
 def test_influx_default_ts(spark):
     by, _ = _influx(spark, ["m f=1"], default_ts_ms=777)
     assert by["m_f"]["ts"] == 777
-    # escape-bearing line goes through the slow path; same default
+    # an escape-bearing line takes the same default
     by2, _ = _influx(spark, ["m,h=a\\ b f=1"], default_ts_ms=778)
     assert by2["m_f"]["ts"] == 778
 

@@ -97,3 +97,34 @@ def test_write_remote_counts_read_errors(spark):
         api.write_remote(b"\xff garbage")
     assert api.read_errors_total["promremotewrite"] == 2
     assert sunk == []
+
+
+def test_write_remote_decodes_body_once(spark, tmp_path, monkeypatch):
+    """The sample count and the sink read one decode of the body: the
+    decoded frame is checkpointed before ``_write_samples`` runs both."""
+    from victoriametrics_spark.api.http import IngestAPI
+    from victoriametrics_spark.streaming import remotewrite
+
+    marker = tmp_path / "decodes"
+    real = remotewrite.remote_write_to_samples
+
+    def counted(payloads, col="payload", compressed=True):
+        def tick(it):
+            for pdf in it:
+                if len(pdf):
+                    with open(marker, "a") as f:
+                        f.write("decode\n")
+                yield pdf
+
+        return real(
+            payloads.mapInPandas(tick, payloads.schema), col, compressed
+        )
+
+    monkeypatch.setattr(remotewrite, "remote_write_to_samples", counted)
+    sunk = []
+    api = IngestAPI(spark, sink=lambda df, kind: sunk.extend(df.collect()))
+    pts = [(1704067200000 + i * 15000, float(i)) for i in range(5)]
+    body = remotewrite.encode_write_request([({"__name__": "m"}, pts)])
+    assert api.write_remote(body) == 5
+    assert sorted((r["ts"], r["value"]) for r in sunk) == pts
+    assert marker.read_text().splitlines() == ["decode"]

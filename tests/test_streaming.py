@@ -623,6 +623,10 @@ def _stateful_fixture_rows():
     # a series that goes stale (gap > staleness) then comes back
     rows.append(("m", {"job": "b", "inst": "3"}, 0, 5.0, False))
     rows.append(("m", {"job": "b", "inst": "3"}, 280_000, 9.0, False))
+    # a group with no samples after its first window: only the
+    # event-time timeout can flush it before the replay ends
+    rows.append(("m", {"job": "c", "inst": "4"}, 0, 1.0, False))
+    rows.append(("m", {"job": "c", "inst": "4"}, 50_000, 4.0, False))
     return rows
 
 
@@ -642,95 +646,183 @@ _STATEFUL_CFG_KW = dict(
 )
 
 
-@pytest.mark.slow
-def test_streamaggr_microbatch_replay_equals_batch(spark, tmp_path):
-    """The foreachBatch stateful engine replayed in 3 micro-batches must
-    reproduce aggregate_batch exactly — counter resets, staleness reset
-    and cross-window running totals included."""
+# event-time-ordered replay cuts, then one far-future sample of an
+# unrelated series: it moves the watermark past every real window end
+# (its own window never flushes, so it adds no output)
+_REPLAY_CUTS = [(0, 100_000), (100_000, 200_000), (200_000, 300_000)]
+_SENTINEL = [("__wm__", {}, 10_000_000, 0.0, False)]
+
+
+def _write_replay_file(spark, src, k, rows):
+    """One parquet file per micro-batch; the mtime fixes replay order."""
+    import os
+
+    tmp = f"{src}_tmp/{k}"
+    spark.createDataFrame(rows, SAMPLE_SCHEMA).coalesce(1).write.parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    dst = os.path.join(src, f"{k:03d}.parquet")
+    os.replace(os.path.join(tmp, part), dst)
+    os.utime(dst, (k + 1, k + 1))
+
+
+def _cut_rows(rows, lo, hi):
+    return [r for r in rows if lo <= r[2] < hi]
+
+
+def _pandas_state_stream(spark, src, cfg):
     from victoriametrics_spark.streaming.streamaggr import (
-        MicroBatchCounterAggregator,
-        StreamAggrConfig,
-        aggregate_batch,
+        aggregate_stream_pandas_state,
     )
 
+    sdf = (
+        spark.readStream.schema(SAMPLE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    return aggregate_stream_pandas_state(sdf, cfg).writeStream.outputMode(
+        "append"
+    )
+
+
+def _assert_equal_outputs(got, want):
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k] == pytest.approx(want[k], rel=1e-12), k
+
+
+def test_streamaggr_pandas_state_replay_equals_batch(spark, tmp_path):
+    """applyInPandasWithState counters (aggregate_stream_pandas_state)
+    replayed over a file source in event-time-ordered micro-batches must
+    reproduce aggregate_batch exactly: counter resets, staleness reset,
+    cross-window running totals. Group c gets no samples after its first
+    window, so only its event-time timeout can flush it — that must
+    happen as the watermark passes, before the sentinel ends the
+    replay."""
+    import os
+
     rows = _stateful_fixture_rows()
-    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
     cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
+    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
     want = _by_name(aggregate_batch(df, cfg))
 
-    agg = MicroBatchCounterAggregator(spark, cfg, str(tmp_path / "sa_state"))
-    got = {}
-    # replay in ts-ordered micro-batches (the streaming contract)
-    cuts = [(0, 100_000), (100_000, 200_000), (200_000, 10_000_000)]
-    for lo, hi in cuts:
-        b = df.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-        got.update(_by_name(agg.process(b)))
-    got.update(_by_name(agg.flush_all()))
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12), k
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs the google.protobuf runtime "
-    "(absent in this container; the microbatch engine above covers the "
-    "semantics)",
-)
-def test_streamaggr_stateful_streaming_replay_equals_batch(spark, tmp_path):
-    """transformWithStateInPandas counters replayed over a file source
-    must reproduce aggregate_batch exactly."""
-    from victoriametrics_spark.streaming.streamaggr import (
-        StreamAggrConfig,
-        aggregate_batch,
-        aggregate_stream_stateful,
-    )
-
-    rows = _stateful_fixture_rows()
-    # watermark pusher: unrelated name far in the future so every real
-    # window's event-time timer fires during the availableNow replay
-    rows.append(("__wm__", {}, 10_000_000, 0.0, False))
-
-    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
-    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
-    want = {
-        k: v
-        for k, v in _by_name(aggregate_batch(df, cfg)).items()
-        if not k[0].startswith("__wm__")
-    }
-
-    src = str(tmp_path / "sa_stateful_src")
-    df.write.parquet(src)
-    sdf = spark.readStream.schema(SAMPLE_SCHEMA).parquet(src)
-    out = aggregate_stream_stateful(sdf, cfg)
-    chk = str(tmp_path / "sa_stateful_chk")
+    src = str(tmp_path / "sa_pds_src")
+    os.makedirs(src)
+    for k, (lo, hi) in enumerate(_REPLAY_CUTS):
+        _write_replay_file(spark, src, k, _cut_rows(rows, lo, hi))
     q = (
-        out.writeStream.format("memory")
-        .queryName("sa_stateful")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
+        _pandas_state_stream(spark, src, cfg)
+        .format("memory")
+        .queryName("sa_pds")
+        .option("checkpointLocation", str(tmp_path / "sa_pds_chk"))
         .start()
     )
-    q.awaitTermination(180)
-    got_df = spark.sql("select * from sa_stateful")
-    got = {
-        k: v
-        for k, v in _by_name(got_df).items()
-        if not k[0].startswith("__wm__")
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12), k
+    try:
+        q.processAllAvailable()
+        # the watermark is now 200s: the idle group's window flushed
+        # on its timeout, without a later sample of group c
+        early = _by_name(spark.sql("select * from sa_pds"))
+        idle = {k: v for k, v in want.items() if dict(k[1]) == {"job": "c"}}
+        assert idle and {k[2] for k in idle} == {100_000}
+        assert {k: early.get(k) for k in idle} == idle
+
+        _write_replay_file(spark, src, len(_REPLAY_CUTS), _SENTINEL)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    _assert_equal_outputs(_by_name(spark.sql("select * from sa_pds")), want)
+
+
+def test_streamaggr_pandas_state_split_scrape_equals_batch(spark, tmp_path):
+    """A scrape split across micro-batches still counts in full. The
+    second batch repeats the first batch's newest timestamp (scrape-
+    aligned samples of other series) and also carries samples OLDER
+    than it, inside the same still-open window. Neither is late, so
+    the replay equals aggregate_batch."""
+    import os
+
+    def scrape(insts, ts, k):
+        return [
+            ("m", {"job": "a", "inst": str(n)}, ts, float(10 * k + n), False)
+            for n in insts
+        ]
+
+    batches = [
+        scrape((1, 2), 20_000, 0) + scrape((1, 2), 70_000, 1),
+        scrape((3, 4), 20_000, 0) + scrape((3, 4), 70_000, 1),
+        scrape((1, 2, 3, 4), 120_000, 2) + scrape((1, 2, 3, 4), 170_000, 3),
+        _SENTINEL,
+    ]
+    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
+    want = _by_name(
+        aggregate_batch(
+            spark.createDataFrame(
+                [r for b in batches[:-1] for r in b], SAMPLE_SCHEMA
+            ),
+            cfg,
+        )
+    )
+
+    src = str(tmp_path / "sa_split_src")
+    os.makedirs(src)
+    _write_replay_file(spark, src, 0, batches[0])
+    q = (
+        _pandas_state_stream(spark, src, cfg)
+        .format("memory")
+        .queryName("sa_split")
+        .option("checkpointLocation", str(tmp_path / "sa_split_chk"))
+        .start()
+    )
+    try:
+        # files arrive one at a time, so the watermark advances (in a
+        # no-data batch) before the next part of the scrape lands
+        q.processAllAvailable()
+        for k, b in enumerate(batches[1:], start=1):
+            _write_replay_file(spark, src, k, b)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    _assert_equal_outputs(_by_name(spark.sql("select * from sa_split")), want)
+
+
+def test_streamaggr_pandas_state_restart_from_checkpoint(spark, tmp_path):
+    """Stop the stateful engine after its first micro-batch and restart
+    it from the same checkpoint on the remaining files: the per-series
+    counters, open windows and running totals come back from the state
+    store, so the combined output still equals aggregate_batch."""
+    import os
+
+    rows = _stateful_fixture_rows()
+    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
+    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
+    want = _by_name(aggregate_batch(df, cfg))
+
+    src = str(tmp_path / "sa_restart_src")
+    sink = str(tmp_path / "sa_restart_out")
+    chk = str(tmp_path / "sa_restart_chk")
+    os.makedirs(src)
+    batches = [_cut_rows(rows, lo, hi) for lo, hi in _REPLAY_CUTS] + [_SENTINEL]
+
+    def run():
+        q = (
+            _pandas_state_stream(spark, src, cfg)
+            .format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", chk)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    _write_replay_file(spark, src, 0, batches[0])
+    run()
+    # nothing can flush yet: every window is still open in the state
+    assert _by_name(spark.read.parquet(sink)) == {}
+    for k, b in enumerate(batches[1:], start=1):
+        _write_replay_file(spark, src, k, b)
+    run()
+    _assert_equal_outputs(_by_name(spark.read.parquet(sink)), want)
 
 
 # -------------------------------------------------------- log ingestion
@@ -945,79 +1037,6 @@ def test_relabel_label_references_in_replacement(spark, sample_df):
     ).collect()
     got = sorted(r["labels"]["combo"] for r in out)
     assert got == ["api@h1:9090", "db@h2:9090"]
-
-
-@pytest.mark.slow
-def test_streamaggr_pandas_state_replay_equals_batch(spark, tmp_path):
-    """applyInPandasWithState counters (aggregate_stream_pandas_state —
-    the stateful-streaming engine that runs WITHOUT the protobuf
-    runtime TWS needs) replayed over a file source in 3 micro-batches
-    must reproduce aggregate_batch exactly: counter resets, staleness
-    reset, cross-window running totals. Watermark-pusher sentinels go
-    to EVERY group (flushing happens on the group's next invocation);
-    their own windows never flush, so they don't contaminate outputs."""
-    import os
-    import time as _time
-
-    from victoriametrics_spark.streaming.streamaggr import (
-        StreamAggrConfig,
-        aggregate_batch,
-        aggregate_stream_pandas_state,
-    )
-
-    rows = _stateful_fixture_rows()
-    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
-    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
-    want = _by_name(aggregate_batch(df, cfg))
-
-    src = str(tmp_path / "sa_pds_src")
-    os.makedirs(src)
-
-    def write_batch(batch_rows, mtime_bump):
-        b = spark.createDataFrame(batch_rows, SAMPLE_SCHEMA)
-        b.coalesce(1).write.mode("append").parquet(src)
-        # space out mtimes so the file source replays in write order
-        now = _time.time() + mtime_bump
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                p = os.path.join(src, f)
-                if os.path.getmtime(p) > now - 0.5:
-                    os.utime(p, (now, now))
-
-    sent1 = [
-        ("m", {"job": "a"}, 10_000_000, 0.0, False),
-        ("m", {"job": "b"}, 10_000_000, 0.0, False),
-    ]
-    sent2 = [
-        ("m", {"job": "a"}, 10_350_000, 0.0, False),
-        ("m", {"job": "b"}, 10_350_000, 0.0, False),
-    ]
-    write_batch(rows, 0)
-    _time.sleep(1.1)
-    write_batch(sent1, 2)
-    _time.sleep(1.1)
-    write_batch(sent2, 4)
-
-    sdf = (
-        spark.readStream.schema(SAMPLE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = aggregate_stream_pandas_state(sdf, cfg)
-    chk = str(tmp_path / "sa_pds_chk")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sa_pds")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = _by_name(spark.sql("select * from sa_pds"))
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12), k
 
 
 def test_sessionize_window_streaming(spark, tmp_path):

@@ -3,16 +3,20 @@
 One pipeline, wired exactly like a production deployment
 (vmagent scrape -> relabel -> streamaggr -> storage -> query):
 
-  readStream file source (3 microbatches via maxFilesPerTrigger=1)
+  readStream file source (one microbatch per scrape file via
+  maxFilesPerTrigger=1)
     -> Prometheus exposition parse (streaming/parsers.py)
     -> relabel DSL (drop + replace, streaming/relabel.py)
-    -> stateful streamaggr counters (MicroBatchCounterAggregator)
-    -> bucketed storage layout sink (storage/layout.py append_samples)
+    -> stateful streamaggr counters (aggregate_stream_pandas_state)
+    -> bucketed storage layout sink (storage/layout.py append_samples,
+       from foreachBatch)
     -> live /api/v1/query freshness probe after every microbatch
 
-and the final stored result must equal the same data replayed as ONE
-batch through the identical operators (the replay==batch property the
-streamaggr engine guarantees).
+A fourth file holds one far-future sample: the watermark it sets lets
+the engine's event-time timeouts flush the last open windows. The final
+stored result must equal the same data run as ONE batch through the
+same parse + relabel and the batch spec, aggregate_batch (the
+replay==batch property the streamaggr engine guarantees).
 """
 
 from __future__ import annotations
@@ -30,8 +34,9 @@ from victoriametrics_spark.storage.layout import (
 from victoriametrics_spark.streaming.parsers import parse_prometheus_text
 from victoriametrics_spark.streaming.relabel import relabel
 from victoriametrics_spark.streaming.streamaggr import (
-    MicroBatchCounterAggregator,
     StreamAggrConfig,
+    aggregate_batch,
+    aggregate_stream_pandas_state,
 )
 
 T0 = 1_700_000_000_000  # epoch ms — unambiguous vs the seconds rule
@@ -57,6 +62,10 @@ def _scrape_lines(k: int) -> str:
     return "\n".join(out) + "\n"
 
 
+# far-future sample that ends the replay (its own window never flushes)
+SENTINEL = f'wm_sentinel{{job="wm"}} 0 {T0 + 100 * IV}\n'
+
+
 def _pipeline(df):
     return relabel(parse_prometheus_text(df, default_ts_ms=T0), RULES)
 
@@ -79,10 +88,11 @@ def cfg():
 def test_stream_ingest_end_to_end(spark, tmp_path, cfg):
     src = str(tmp_path / "scrapes")
     os.makedirs(src)
-    for k in range(3):
+    bodies = [_scrape_lines(k) for k in range(3)] + [SENTINEL]
+    for k, body in enumerate(bodies):
         p = os.path.join(src, f"{k:03d}.txt")
         with open(p, "w") as f:
-            f.write(_scrape_lines(k))
+            f.write(body)
         os.utime(p, (k + 1, k + 1))  # deterministic batch order
 
     stream_table = "e2e_stream_sink"
@@ -96,16 +106,22 @@ def test_stream_ingest_end_to_end(spark, tmp_path, cfg):
 
         shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
 
-    agg = MicroBatchCounterAggregator(spark, cfg, str(tmp_path / "state"))
     probes: list[tuple[int, int, int]] = []  # (batch, rows_in_table, max_ts)
 
-    def handle(df, batch_id):
-        flushed = agg.process(_pipeline(df))
+    def handle(flushed, batch_id):
+        flushed = flushed.persist()
         if flushed.count():
             append_samples(
                 flushed.withColumn("is_stale", F.lit(False)), stream_table
             )
-        # live query-path freshness probe against the bucketed table
+        flushed.unpersist()
+        if not spark.catalog.tableExists(stream_table):
+            probes.append((int(batch_id), 0, 0))  # no window closed yet
+            return
+        # the append ran in the query's own session: drop this session's
+        # cached file listing, then probe the live query path against
+        # the bucketed table
+        spark.catalog.refreshTable(stream_table)
         stored = read_samples_table(spark, stream_table)
         api = PromAPI(spark, stored)
         out = api.query(
@@ -121,21 +137,29 @@ def test_stream_ingest_end_to_end(spark, tmp_path, cfg):
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
-    q = sdf.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination(300)
-    rest = agg.flush_all()
-    if rest.count():
-        append_samples(
-            rest.withColumn("is_stale", F.lit(False)), stream_table
-        )
+    q = (
+        aggregate_stream_pandas_state(_pipeline(sdf), cfg)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
-    # three microbatches ran; the table got strictly fresher each time
-    assert [b for b, _, _ in probes] == [0, 1, 2]
+    # one probe per microbatch; the table only ever got fresher, one
+    # 2m window end at a time (windows align to epoch multiples of IV)
+    assert [b for b, _, _ in probes] == list(range(len(probes)))
+    assert len(probes) >= len(bodies)
     counts = [n for _, n, _ in probes]
     max_ts = [m for _, _, m in probes]
-    assert counts == sorted(counts) and counts[-1] > counts[0]
-    assert max_ts == sorted(max_ts) and max_ts[-1] > max_ts[0]
+    assert counts == sorted(counts) and counts[-1] > 0
+    assert max_ts == sorted(max_ts)
+    w0_end = T0 - T0 % IV + IV
+    assert sorted(set(max_ts) - {0}) == [w0_end + i * IV for i in range(4)]
 
+    spark.catalog.refreshTable(stream_table)
     got = _table_rows(spark, stream_table)
     # relabel proof: junk series gone, env=prod stamped into the output
     assert got and all("junk" not in name for name, *_ in got)
@@ -153,22 +177,17 @@ def test_stream_ingest_end_to_end(spark, tmp_path, cfg):
         per_job[dict(lbls)["job"]] = per_job.get(dict(lbls)["job"], 0.0) + v
     assert per_job == {"a": 60.0, "b": 18.0}
 
-    # ---- replay==batch: same operators, one batch, equal result ----
+    # ---- replay==batch: same parse + relabel, the batch spec ----
     all_lines = spark.createDataFrame(
-        [(line,) for k in range(3) for line in _scrape_lines(k).splitlines()],
+        [(line,) for body in bodies[:3] for line in body.splitlines()],
         ["value"],
     )
-    agg2 = MicroBatchCounterAggregator(spark, cfg, str(tmp_path / "state2"))
-    out2 = agg2.process(_pipeline(all_lines))
-    if out2.count():
-        append_samples(
-            out2.withColumn("is_stale", F.lit(False)), batch_table
-        )
-    rest2 = agg2.flush_all()
-    if rest2.count():
-        append_samples(
-            rest2.withColumn("is_stale", F.lit(False)), batch_table
-        )
+    append_samples(
+        aggregate_batch(_pipeline(all_lines), cfg).withColumn(
+            "is_stale", F.lit(False)
+        ),
+        batch_table,
+    )
     assert got == _table_rows(spark, batch_table)
 
     # ---- /api/v1/query end state: exact values through the API ----

@@ -3809,8 +3809,11 @@ class IngestAPI:
         except Exception:
             pass  # metadata is best-effort; samples still land
         payloads = self.spark.createDataFrame([(bytearray(raw),)], "payload binary")
+        # decode once: the count and the append share the checkpoint
         return self._write_samples(
-            remote_write_to_samples(payloads, compressed=False)
+            remote_write_to_samples(payloads, compressed=False).localCheckpoint(
+                eager=True
+            )
         )
 
     def _metadata_tenant(self):

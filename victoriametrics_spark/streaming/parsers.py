@@ -8,11 +8,10 @@ VM JSON-line import/export (lib/protoparser/vmimport/).
 Each parser is a pure column-expression transform over a one-column
 DataFrame of text lines (`value` column, as produced by
 ``spark.read.text`` / ``spark.readStream.text``), so the same code path
-serves batch backfill and streaming ingest. Influx lines that carry
-line-protocol escapes or quoted field strings take an Arrow-batched
-``mapInPandas`` slow path (the reference keeps the same fast/slow split
-via its ``noEscapes`` flag, influx/parser.go:400-447); everything else
-stays JVM-side.
+serves batch backfill and streaming ingest. The two quote- and
+escape-bearing dialects, Prometheus text and Influx, tokenize each line
+once in an Arrow-batched ``mapInPandas`` pass; number and timestamp
+finishing stays in Catalyst.
 
 Robustness contract (round 11, mirroring
 lib/protoparser/prometheus/parser.go:21-49 errLogger-and-skip): a
@@ -22,6 +21,8 @@ them into the ``vm_rows_invalid_total`` analog).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -178,19 +179,15 @@ def parse_graphite(
 # ------------------------------------------------------------------ influx
 # Field-value typing (influx/parser.go:355-398 parseFieldValue): 123i
 # integer, 123u unsigned, booleans → 1/0, quoted strings best-effort,
-# bare floats incl. inf/nan spellings.
+# bare decimal floats incl. inf/nan spellings. The number grammars are
+# ASCII-only regexes: Python's int()/float() alone would also accept
+# underscores, unicode digits and padding (fastfloat does not).
 _INFLUX_TRUE = ("t", "T", "true", "True", "TRUE")
 _INFLUX_FALSE = ("f", "F", "false", "False", "FALSE")
-
-
-def _influx_field_value(s: Column) -> Column:
-    return (
-        F.when(s.rlike(r"^-?\d+i$"), F.regexp_replace(s, "i$", "").try_cast("double"))
-        .when(s.rlike(r"^\d+u$"), F.regexp_replace(s, "u$", "").try_cast("double"))
-        .when(s.isin(*_INFLUX_TRUE), F.lit(1.0))
-        .when(s.isin(*_INFLUX_FALSE), F.lit(0.0))
-        .otherwise(_try_double(s))
-    )
+_INFLUX_INT = re.compile(r"-?\d+", re.A)
+_INFLUX_UINT = re.compile(r"\d+", re.A)
+_INFLUX_TS = re.compile(r"[+-]?\d+", re.A)
+_INFLUX_FLOAT = re.compile(r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?", re.A)
 
 
 def _influx_unescape(s: str) -> str:
@@ -266,8 +263,7 @@ def _split_fields(s: str) -> list[str]:
 
 
 def _influx_field_num(v: str) -> "float | None":
-    """parseFieldValue (influx/parser.go:355-398) in Python, for the
-    escaped-line slow path."""
+    """parseFieldValue (influx/parser.go:355-398); None = invalid."""
     if v == "":
         return None
     if v[0] == '"':
@@ -278,26 +274,28 @@ def _influx_field_num(v: str) -> "float | None":
             return float(inner)
         except ValueError:
             return 0.0  # ParseBestEffort: non-numeric strings → 0
-    if v[-1] == "i" or v[-1] == "u":
-        try:
-            return float(int(v[:-1]))
-        except ValueError:
+    if v[-1] in ("i", "u"):
+        digits = v[:-1]
+        if not (_INFLUX_INT if v[-1] == "i" else _INFLUX_UINT).fullmatch(digits):
             return None
+        try:
+            return float(int(digits))
+        except (ValueError, OverflowError):
+            return None  # past Python's int-string limit or the double range
     if v in _INFLUX_TRUE:
         return 1.0
     if v in _INFLUX_FALSE:
         return 0.0
-    try:
+    if _INFLUX_FLOAT.fullmatch(v):
         return float(v)
-    except ValueError:
-        lv = v.lower()
-        if lv in ("inf", "+inf", "infinity", "+infinity"):
-            return float("inf")
-        if lv in ("-inf", "-infinity"):
-            return float("-inf")
-        if lv in ("nan", "+nan", "-nan"):
-            return float("nan")
-        return None
+    lv = v.lower()
+    if lv in ("inf", "+inf", "infinity", "+infinity"):
+        return float("inf")
+    if lv in ("-inf", "-infinity"):
+        return float("-inf")
+    if lv in ("nan", "+nan", "-nan"):
+        return float("nan")
+    return None
 
 
 def _influx_parse_line(s: str) -> "list[tuple[str, dict, int | None, float]] | None":
@@ -363,9 +361,15 @@ def _influx_parse_line(s: str) -> "list[tuple[str, dict, int | None, float]] | N
         labels[k] = v
     ts_raw: "int | None" = None
     if ts_str:
+        # the timestamp is a bigint: anything outside it (or past
+        # Python's int-string limit) rejects the line, not the batch
+        if not _INFLUX_TS.fullmatch(ts_str):
+            return None
         try:
             ts_raw = int(ts_str)
         except ValueError:
+            return None
+        if not -(1 << 63) <= ts_raw < (1 << 63):
             return None
     out = []
     for fv in _split_fields(fields_str):
@@ -381,8 +385,8 @@ def _influx_parse_line(s: str) -> "list[tuple[str, dict, int | None, float]] | N
     return out or None
 
 
-def _influx_slow_batches(pdfs, with_line_id: bool):
-    """mapInPandas worker: escape-bearing influx lines → sample rows."""
+def _influx_decode_batches(pdfs, with_line_id: bool):
+    """mapInPandas worker: influx lines → sample rows (null lines skip)."""
     import pandas as pd
 
     for pdf in pdfs:
@@ -424,6 +428,10 @@ def _influx_ts_to_ms(
     coarse (s/m/h) precisions like the reference's
     ``currentTs -= currentTs % tsMultiplier``.
 
+    Scaling up is a ``try_multiply``: a timestamp that overflows the
+    bigint nulls its row out (under ANSI mode a plain product would
+    fail the batch).
+
     ``raw`` must be a plain column reference (its name is used inside
     an integral-``div`` SQL expression: nanosecond values exceed the
     double mantissa, so any float division path corrupts low digits).
@@ -454,7 +462,7 @@ def _influx_ts_to_ms(
             )
             .when(raw >= 100_000_000_000_000, F.expr(f"{col_sql} div 1000"))
             .when(raw >= 100_000_000_000, raw)
-            .otherwise(raw * 1000)
+            .otherwise(F.try_multiply(raw, F.lit(1000)))
         )
     if mult >= 1:
         scaled = raw if mult == 1 else F.expr(f"{col_sql} div {mult}")
@@ -465,7 +473,7 @@ def _influx_ts_to_ms(
         if default_ts_ms is not None
         else F.lit(None).cast("long")
     )
-    return F.when(absent, rounded_default).otherwise(raw * F.lit(m))
+    return F.when(absent, rounded_default).otherwise(F.try_multiply(raw, F.lit(m)))
 
 
 def _col_name(c: Column) -> str:
@@ -487,164 +495,74 @@ def parse_influx(
     =false); one output row per field; a line whose ANY field fails to
     parse is rejected whole (parser.go:110-173).
 
-    Fast/slow split like the reference's ``noEscapes`` flag
-    (parser.go:400-447): lines without backslash escapes or quoted
-    field strings parse entirely JVM-side; escape-bearing lines go
-    through an Arrow-batched ``mapInPandas`` that implements
-    nextUnescapedChar/unescapeTagValue semantics. ``keep_line_id``
-    threads a per-line id through for invalid-line accounting."""
+    Every line goes through one Arrow-batched ``mapInPandas`` pass
+    (``_influx_parse_line``: nextUnescapedChar/unescapeTagValue/
+    parseFieldValue semantics); precision scaling stays in Catalyst.
+    ``keep_line_id`` threads a per-line id through for invalid-line
+    accounting."""
     src = lines
     if keep_line_id:
         src = src.withColumn("__line_id", F.monotonically_increasing_id())
     extra = ("__line_id",) if keep_line_id else ()
-    l = F.col("value")
-    has_slow = l.contains("\\") | l.contains('"')
-    nonblank = (_wstrip(l) != "") & ~_wstrip(l).startswith("#")
-
-    # ---- fast path: no escapes, no quoted fields (pure Catalyst).
-    # Sections separate on SPACE RUNS (the reference strips leading
-    # whitespace between sections, parser.go:117,155) — safe here
-    # because escaped spaces route to the slow path.
-    plain = src.filter(nonblank & ~has_slow)
-    # a LEADING space means an empty measurement (parser.go:112-131
-    # allows it; the metric name then comes from field keys alone)
-    lead = l.startswith(" ")
-    toks3 = F.split(F.regexp_replace(l, r"^ +| +$", ""), r" +")
-
-    def _tok(i):
-        return F.coalesce(F.try_element_at(toks3, F.lit(i)), F.lit(""))
-
-    head = F.when(lead, F.lit("")).otherwise(_tok(1))
-    fields_str = F.when(lead, _tok(1)).otherwise(_tok(2))
-    ts_str = F.when(lead, _tok(2)).otherwise(_tok(3))
-    max_toks = F.when(lead, F.lit(2)).otherwise(F.lit(3))
-    meas = F.split_part(head, F.lit(","), F.lit(1))
-    tags_str = F.regexp_replace(head, r"^[^,]*,?", "")
-    # raw tokens, unfiltered: a field token that is empty or lacks '='
-    # rejects the WHOLE line (unmarshalInfluxFields error); same for a
-    # tag token (tag.unmarshal "missing tag value") — while tags with
-    # an empty key or value are silently skipped (parser_test.go:
-    # `foo,tag1=xyz,tagN=,tag2=43as,=xxx bar=123` keeps tag1/tag2)
-    fields = F.split(fields_str, ",")
-    tag_toks = F.split(tags_str, ",")
-    parsed_fields = F.transform(
-        fields,
-        lambda p: F.struct(
-            F.split_part(p, F.lit("="), F.lit(1)).alias("fkey"),
-            _influx_field_value(
-                F.regexp_replace(p, r"^[^=]*=", "")
-            ).alias("fval"),
-        ),
-    )
-    ts_raw = ts_str.try_cast("bigint")
-    line_ok = (
-        (F.size(toks3) <= max_toks)  # junk after ts errors the line
-        & (fields_str != "")
-        & ~F.exists(
-            fields, lambda p: (p == "") | ~p.contains("=")
-        )
-        & ~F.exists(
-            parsed_fields,
-            lambda x: x["fval"].isNull() | (x["fkey"] == ""),
-        )
-        & (
-            (tags_str == "")
-            | ~F.exists(tag_toks, lambda t: ~t.contains("="))
-        )
-        & ((ts_str == "") | ts_raw.isNotNull())
-    )
-    fast = plain.filter(line_ok).select(
-        meas.alias("meas"),
-        _tags_to_map(tags_str, ",", "=", skip_empty=True).alias("labels"),
-        F.when(ts_str != "", ts_raw).alias("ts"),
-        F.explode(parsed_fields).alias("fv"),
-        *[F.col(c) for c in extra],
-    )
-    fast = fast.select(
-        F.when(F.col("meas") == "", F.col("fv.fkey"))
-        .otherwise(F.concat(F.col("meas"), F.lit("_"), F.col("fv.fkey")))
-        .alias("name"),
-        F.col("labels"),
-        F.col("ts"),
-        F.col("fv.fval").alias("value"),
-        *[F.col(c) for c in extra],
-    )
-
-    # ---- slow path: escape/quote-bearing lines via Arrow batches
-    slow_in = src.filter(nonblank & has_slow)
     out_schema = (
         "name string, labels map<string,string>, ts long, value double"
     )
     if keep_line_id:
         out_schema += ", __line_id long"
-    slow = slow_in.mapInPandas(
-        lambda it: _influx_slow_batches(it, keep_line_id), out_schema
+    parsed = src.mapInPandas(
+        lambda it: _influx_decode_batches(it, keep_line_id), out_schema
     )
-
-    both = fast.unionByName(slow)
     # precision scaling / magnitude auto-detect over the RAW timestamp
-    # (streamparser.go:294-323; both paths emit unscaled ts)
-    both = both.withColumn(
+    # (streamparser.go:294-323)
+    parsed = parsed.withColumn(
         "ts", _influx_ts_to_ms(F.col("ts"), precision, default_ts_ms)
     )
-    return _finish(both, extra=extra)
+    return _finish(parsed, extra=extra)
 
 
-# ---- single-pass prometheus-text decode (r14) -----------------------
-# The Catalyst cascade below evaluates the quote-aware brace regex 4x
-# per line (rlike + 3 regexp_extract groups) plus the pair/validation/
-# unescape passes; this batched decode runs every regex ONCE per line
-# in compiled Python (patterns compiled at import, once per worker —
-# guide §4.5), emitting the raw (name, keys, vals, val, ts) pieces.
-# Value/timestamp parsing and the labels map stay in Catalyst so
-# try_cast semantics are bit-identical. Measured on 400k adversarial
-# escape-bearing lines: 4.9s -> 1.4s min-of-3, identical rows incl.
-# poison/quoted-name/comment cases (exceptAll 0/0); the upstream
-# 232-case parser corpus and the escape suite pin equivalence.
+# ---- prometheus text: one batched decode per line --------------------
+# Every regex runs ONCE per line in compiled Python (patterns compiled
+# at import, once per worker), emitting the raw (name, keys, vals, val,
+# ts) pieces; value/timestamp parsing and the labels map stay in
+# Catalyst so try_cast semantics match the other dialects. The upstream
+# 232-case parser corpus and the escape suite pin the behaviour.
 # re.A pins \s/\S to ASCII like Java's regex.
-_PROM_BODY = r'((?:[^"}]|"(?:[^"\\]|\\.)*")*)'
-_PROM_BRACED: dict | None = None  # compiled-pattern table, built lazily
-
-
-def _prom_patterns():
-    """Compile once per interpreter (import-time in workers)."""
-    global _PROM_BRACED
-    if _PROM_BRACED is not None:
-        return _PROM_BRACED
-    import re
-
-    qs = r'"(?:[^"\\]|\\.)*"'
-    elem = rf'(?:{qs}\s*=\s*{qs}|[^=,"]*=\s*{qs}|{qs})'
-    _PROM_BRACED = {
-        "braced": re.compile(r"^([^{\s]*)\s*\{" + _PROM_BODY + r"\}\s*(.*)$", re.A),
-        "pair": re.compile(
-            r'("(?:[^"\\]|\\.)*"|[^=,\s"]+)\s*=\s*"((?:[^"\\]|\\.)*)"', re.A
-        ),
-        "qname": re.compile(r'(?:^|,)\s*"((?:[^"\\]|\\.)*)"\s*(?=,|$)', re.A),
-        "body_ok": re.compile(
-            rf"^\s*(?:{elem}\s*(?:,\s*{elem}\s*)*(?:,\s*)?)?$", re.A
-        ),
-        "ws": re.compile(r"^\s+|\s+$", re.A),
-        "comment": re.compile(r"#.*$"),
-        "splitws": re.compile(r"\s+", re.A),
-        "first_tok": re.compile(r"^(\S+)", re.A),
-        "lead_tok": re.compile(r"^\S+\s*", re.A),
-        "outer_q": re.compile(r'^"|"$'),
-    }
-    return _PROM_BRACED
+_PROM_QS = r'"(?:[^"\\]|\\.)*"'
+_PROM_ELEM = rf'(?:{_PROM_QS}\s*=\s*{_PROM_QS}|[^=,"]*=\s*{_PROM_QS}|{_PROM_QS})'
+_PROM_RE = {
+    "braced": re.compile(
+        r'^([^{\s]*)\s*\{((?:[^"}]|"(?:[^"\\]|\\.)*")*)\}\s*(.*)$', re.A
+    ),
+    "pair": re.compile(
+        r'("(?:[^"\\]|\\.)*"|[^=,\s"]+)\s*=\s*"((?:[^"\\]|\\.)*)"', re.A
+    ),
+    "qname": re.compile(r'(?:^|,)\s*"((?:[^"\\]|\\.)*)"\s*(?=,|$)', re.A),
+    "body_ok": re.compile(
+        rf"^\s*(?:{_PROM_ELEM}\s*(?:,\s*{_PROM_ELEM}\s*)*(?:,\s*)?)?$", re.A
+    ),
+    "ws": re.compile(r"^\s+|\s+$", re.A),
+    "comment": re.compile(r"#.*$"),
+    "splitws": re.compile(r"\s+", re.A),
+    "first_tok": re.compile(r"^(\S+)", re.A),
+    "lead_tok": re.compile(r"^\S+\s*", re.A),
+    "outer_q": re.compile(r'^"|"$'),
+}
 
 
 def _prom_unescape(s: str) -> str:
-    """unescapeValue (parser.go:419-453) — identical to _unescape_prom's
-    split-on-double-backslash algorithm, in Python."""
+    """unescapeValue (parser.go:419-453): ``\\\\``→``\\``,
+    ``\\\"``→``\"``, ``\\n``→newline, any other ``\\x`` stays literal.
+    Split on double backslash first so the 3-backslash edge cases come
+    out right."""
     pieces = s.split("\\\\")
     return "\\".join(
         p.replace('\\"', '"').replace("\\n", "\n") for p in pieces
     )
 
 
-def _prom_decode_line(raw: str, P: dict):
-    l = P["ws"].sub("", raw)
+def _prom_decode_line(raw: "str | None"):
+    P = _PROM_RE
+    l = P["ws"].sub("", raw or "")
     if l == "" or l.startswith("#"):
         return None
     m = P["braced"].match(l)
@@ -688,12 +606,11 @@ def _prom_decode_line(raw: str, P: dict):
 def _prom_decode_batches(it):
     import pandas as pd
 
-    P = _prom_patterns()
     for pdf in it:
         rows = [
             r
             for raw in pdf["value"]
-            if (r := _prom_decode_line(raw, P)) is not None
+            if (r := _prom_decode_line(raw)) is not None
         ]
         yield pd.DataFrame(
             rows, columns=["name", "keys", "vals", "val", "tss", "braced"]
@@ -701,14 +618,19 @@ def _prom_decode_batches(it):
 
 
 def parse_prometheus_text(lines: DataFrame, default_ts_ms: int) -> DataFrame:
-    """Single-pass batched decode (see _prom_decode_batches) + Catalyst
-    value/timestamp/labels finishing. Set ``SPARK_GRAFT_PROM_CATALYST=1``
-    to force the pure-Catalyst cascade (kept verbatim below as the
-    equivalence reference and operational fallback)."""
-    import os
+    """Prometheus exposition text: ``metric{a="b",...} value [ts]``
+    (federate/scrape format; comments and blank lines skipped), plus the
+    UTF-8 names syntax ``{"any name", "any label"="v"} value [ts]``
+    (quoted metric and label names inside the braces).
 
-    if os.environ.get("SPARK_GRAFT_PROM_CATALYST"):
-        return _parse_prometheus_text_catalyst(lines, default_ts_ms)
+    Label tokenization is quoted-string-aware (parser.go:286-306
+    unmarshalQuotedString): a ``}`` or ``,`` inside a quoted label value
+    does not truncate the label block; the body is validated strictly
+    (unmarshalTags, parser.go:309-392); everything after ``#`` in the
+    value/timestamp tail is a trailing comment (OpenMetrics exemplars);
+    junk after the timestamp rejects the line. Timestamps parse as
+    floats, and values in [-2^31, 2^31) are OpenMetrics Unix seconds,
+    scaled to ms (parser.go:218-229)."""
     l = _wstrip(F.col("value"))
     data = lines.select(l.alias("value"))
     decoded = data.mapInPandas(
@@ -739,150 +661,6 @@ def parse_prometheus_text(lines: DataFrame, default_ts_ms: int) -> DataFrame:
             _try_double(F.col("val")).alias("value"),
         )
     )
-
-
-def _parse_prometheus_text_catalyst(
-    lines: DataFrame, default_ts_ms: int
-) -> DataFrame:
-    """Prometheus exposition text: ``metric{a="b",...} value [ts_ms]``
-    (federate/scrape format; comments and blank lines skipped), plus the
-    UTF-8 names syntax ``{"any name", "any label"="v"} value [ts_ms]``
-    (Prometheus 3.x / VM: quoted metric and label names inside the
-    braces).
-
-    Label tokenization is quoted-string-aware (parser.go:286-306
-    unmarshalQuotedString): a ``}`` or ``,`` inside a quoted label
-    value — routine in HTTP paths and error messages — does not
-    truncate the label block, and ``\\\"``/``\\\\``/``\\n`` escapes
-    unescape per parser.go:419-453 (an invalid escape like the
-    real-world ``domain\\somelogin`` stays literal). All in Catalyst:
-    the label block is matched with a quote-aware regex, pairs are
-    pulled with regexp_extract_all, and unescaping is a
-    split-on-``\\\\`` / replace / rejoin over array columns."""
-    l = _wstrip(F.col("value"))
-    data = lines.select(l.alias("value")).filter((l != "") & ~l.startswith("#"))
-    v = F.col("value")
-
-    # quote-aware label block: "..." spans may contain } , and \" pairs
-    body_re = r'((?:[^"}]|"(?:[^"\\]|\\.)*")*)'
-    braced_pat = r"^([^{\s]*)\s*\{" + body_re + r"\}\s*(.*)$"
-    braced = v.rlike(r'^[^{\s]*\s*\{(?:[^"}]|"(?:[^"\\]|\\.)*")*\}')
-    name_classic = F.regexp_extract(v, braced_pat, 1)
-    body = F.regexp_extract(v, braced_pat, 2)
-    rest_braced = F.regexp_extract(v, braced_pat, 3)
-
-    # pairs: key="value" | "key"="value" (whitespace-tolerant)
-    pair_pat = r'("(?:[^"\\]|\\.)*"|[^=,\s"]+)\s*=\s*"((?:[^"\\]|\\.)*)"'
-    keys = F.regexp_extract_all(body, F.lit(pair_pat), F.lit(1))
-    vals = F.regexp_extract_all(body, F.lit(pair_pat), F.lit(2))
-    # UTF-8 form: a bare quoted element (not followed by =) is the name
-    qname_pat = r'(?:^|,)\s*"((?:[^"\\]|\\.)*)"\s*(?=,|$)'
-    name_quoted = _unescape_prom(F.regexp_extract(body, qname_pat, 1))
-    # STRICT body validation (unmarshalTags, parser.go:309-392): the
-    # label block must be a comma-separated sequence of
-    # key="value" / "key"="value" / "metric name" elements — a bare
-    # word, an unquoted value, a colon separator, or a missing comma
-    # errors the line; a trailing comma is fine. At most ONE quoted
-    # metric name, and none when the classic name is set ("metric name
-    # already set" errors).
-    qs = r'"(?:[^"\\]|\\.)*"'
-    elem = rf'(?:{qs}\s*=\s*{qs}|[^=,"]*=\s*{qs}|{qs})'
-    body_ok = body.rlike(
-        rf"^\s*(?:{elem}\s*(?:,\s*{elem}\s*)*(?:,\s*)?)?$"
-    )
-    n_qnames = F.size(
-        F.regexp_extract_all(body, F.lit(qname_pat), F.lit(1))
-    )
-    name_ok = body_ok & (
-        (n_qnames == 0)
-        | ((n_qnames == 1) & (name_classic == ""))
-    )
-
-    labels = F.map_from_arrays(
-        F.transform(
-            keys,
-            lambda k: _unescape_prom(F.regexp_replace(k, r'^"|"$', "")),
-        ),
-        F.transform(vals, _unescape_prom),
-    )
-    name_b = F.when(name_classic != "", name_classic).otherwise(name_quoted)
-    # value/timestamp tail: everything after the first '#' is a
-    # trailing comment — OpenMetrics exemplars are tolerated this way
-    # (parser.go:117-123,191 skipTrailingComment)
-    rest_b = F.trim(F.regexp_replace(rest_braced, r"#.*$", ""))
-    rest_nb = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(v, r"^\S+\s*", ""), r"#.*$", ""
-        )
-    )
-    toks_b = F.split(rest_b, r"\s+")
-    toks_p = F.split(rest_nb, r"\s+")
-    # a line containing { that does NOT match the quote-aware brace
-    # pattern is malformed (unterminated label block) — reference
-    # errors it (parser.go unmarshalTags "missing value for tag"),
-    # it must not fall back to the bare-metric form
-    name = (
-        F.when(braced & name_ok, name_b)
-        .when(braced, F.lit(None).cast("string"))
-        .when(~v.contains("{"), F.regexp_extract(v, r"^(\S+)", 1))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    val = F.coalesce(
-        F.when(braced, F.try_element_at(toks_b, F.lit(1))).otherwise(
-            F.try_element_at(toks_p, F.lit(1))
-        ),
-        F.lit(""),
-    )
-    ts_str = F.coalesce(
-        F.when(braced, F.try_element_at(toks_b, F.lit(2))).otherwise(
-            F.try_element_at(toks_p, F.lit(2))
-        ),
-        F.lit(""),
-    )
-    # junk after the timestamp errors the line: the reference parses the
-    # ENTIRE tail after the value as one timestamp token, so
-    # `m{a="b"} 1 2 3` fails fastfloat.Parse("2 3")
-    # (parser.go:206-229); same rule as the influx fast path's
-    # max-token check
-    n_tail = F.when(braced, F.size(toks_b)).otherwise(F.size(toks_p))
-    ts_str = F.when(n_tail > 2, F.lit("junk")).otherwise(ts_str)
-    # timestamps parse as floats; values in [-2^31, 2^31) look like
-    # OpenMetrics Unix SECONDS and scale to ms (parser.go:218-229)
-    tsd = _try_double(ts_str)
-    ts = (
-        F.when(ts_str == "", F.lit(default_ts_ms).cast("long"))
-        .when(tsd.isNull(), F.lit(None).cast("long"))
-        .when(
-            (tsd >= -2147483648.0) & (tsd < 2147483648.0),
-            (tsd * 1000).try_cast("long"),
-        )
-        .otherwise(tsd.try_cast("long"))
-    )
-    return _finish(
-        data.select(
-            name.alias("name"),
-            F.when(braced, labels)
-            .otherwise(F.create_map().cast("map<string,string>"))
-            .alias("labels"),
-            ts.alias("ts"),
-            _try_double(val).alias("value"),
-        )
-    )
-
-
-def _unescape_prom(c: Column) -> Column:
-    """unescapeValue (prometheus/parser.go:419-453): ``\\\\``→``\\``,
-    ``\\\"``→``\"``, ``\\n``→newline, any other ``\\x`` stays literal.
-    Implemented as split-on-double-backslash → per-piece replace →
-    rejoin, which gets the 3-backslash edge cases right without a UDF."""
-    pieces = F.split(c, r"\\\\", -1)
-    pieces = F.transform(
-        pieces,
-        lambda p: F.regexp_replace(
-            F.regexp_replace(p, r'\\"', '"'), r"\\n", "\n"
-        ),
-    )
-    return F.array_join(pieces, "\\")
 
 
 def parse_vm_jsonl(lines: DataFrame) -> DataFrame:

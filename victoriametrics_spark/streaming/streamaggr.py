@@ -3,17 +3,24 @@ lib/streamaggr: tumbling-interval aggregation of the sample stream with
 VM's output set, last-wins deduplication, and counter state with a
 staleness TTL.
 
-Two execution modes share one config and one semantics definition:
+Three entry points share one config; the batch one defines the
+semantics:
 
-- ``aggregate_batch(df, cfg)`` — the batch formulation (micro-batch
-  backfill / oracle-checkable): tumbling windows are ``floor(ts/interval)``
-  buckets, flushed at the bucket end. Counter outputs (total/increase)
-  derive per-series reset-adjusted deltas with one lag window and
-  accumulate across buckets with a running-sum frame — no driver state.
-- ``aggregate_stream(sdf, cfg)`` — Structured Streaming: the same
-  aggregates over ``window(ts, interval)`` with a watermark for late
-  data (VM drops samples older than the current flush window,
-  streamaggr.go flush logic; the watermark is the compat knob).
+- ``aggregate_batch(df, cfg)`` — the batch formulation and the spec
+  (backfill / oracle-checkable): tumbling windows are
+  ``floor(ts/interval)`` buckets, flushed at the bucket end. Counter
+  outputs (total/increase) derive per-series reset-adjusted deltas with
+  one lag window and accumulate across buckets with a running-sum
+  frame — no driver state.
+- ``aggregate_stream(sdf, cfg)`` — Structured Streaming, stateless
+  outputs: the same aggregates over ``window(ts, interval)`` with a
+  watermark for late data (VM drops samples older than the current
+  flush window, streamaggr.go flush logic; the watermark is the compat
+  knob).
+- ``aggregate_stream_pandas_state(sdf, cfg)`` — Structured Streaming,
+  counter outputs: ``applyInPandasWithState`` with per-group state in
+  Spark's checkpointed state store, so restart and replay come from the
+  checkpoint. Replayed in order it reproduces ``aggregate_batch``.
 
 Output series naming follows the reference exactly
 (streamaggr.go:627-635):
@@ -348,9 +355,7 @@ def aggregate_stream(
     values trade latency for late-data tolerance.
 
     Counter outputs (total/increase/rate_*) need per-series state with a
-    staleness TTL → transformWithStateInPandas; the batch formulation in
-    ``aggregate_batch`` defines their semantics and serves micro-batch
-    (foreachBatch) deployments.
+    staleness TTL: use ``aggregate_stream_pandas_state``.
     """
     stateless = [o for o in cfg.outputs if o in STATELESS_OUTPUTS]
     if not stateless:
@@ -382,277 +387,44 @@ def aggregate_stream(
     return out
 
 
-# ------------------------------------------------------------------ round 6:
-# TRUE-streaming stateful counters via transformWithStateInPandas.
-# aggregate_batch above DEFINES the semantics; this is the same math with
-# per-series state held by the Spark state store instead of a lag window:
-# lastValue/lastTs per series (total.go:34-51 lastValue map), staleness
-# reset (streamaggr.go:175-182), warmup deadline
-# (ignoreFirstSampleDeadline), per-interval flush driven by EVENT-TIME
-# timers, and cumulative totals carried across flushes in a ValueState.
-
-_TWS_OUTPUT_SCHEMA = (
-    "name string, labels_json string, ts long, value double"
-)
-
-
-def _make_counter_processor(cfg: StreamAggrConfig, outputs: list[str]):
-    """Build the StatefulProcessor class for the configured outputs.
-
-    State layout (all per (name, group-labels) grouping key):
-    - ``series``  MapState  sk -> (last_ts, last_value)
-    - ``win``     MapState  w  -> (inc, n_inc, inc_keep, n_keep, ss,
-                                   rate_sum, nser)
-    - ``wser``    MapState  "w|sk" -> 1  (distinct-series markers)
-    - ``totals``  ValueState (total, total_prom, ss_total)
-    - ``meta``    ValueState (t0, labels_json)
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    iv = cfg.interval_ms
-    staleness = cfg.staleness_interval_ms or 0
-    warmup = cfg.ignore_first_sample_interval_ms or 0
-    out_names = {o: None for o in outputs}  # order-preserving
-    sfx = cfg.suffix()
-    keep_names = cfg.keep_metric_names
-
-    class CounterProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._series = handle.getMapState(
-                "series", "sk string", "last_ts long, last_value double"
-            )
-            self._win = handle.getMapState(
-                "win",
-                "w long",
-                "inc double, n_inc long, inc_keep double, n_keep long, "
-                "ss double, rate_sum double, nser long",
-            )
-            self._wser = handle.getMapState("wser", "k string", "one int")
-            self._totals = handle.getValueState(
-                "totals", "total double, total_prom double, ss_total double"
-            )
-            self._meta = handle.getValueState(
-                "meta", "t0 long, labels_json string"
-            )
-            self._handle = handle
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values("ts", kind="mergesort")
-            meta = self._meta.get() if self._meta.exists() else None
-            t0 = meta[0] if meta else None
-            labels_json = meta[1] if meta else None
-            for sk, ts, v, lj in zip(
-                batch["__sk"], batch["ts"], batch["value"], batch["labels_json"]
-            ):
-                ts, v = int(ts), float(v)
-                if t0 is None:
-                    t0 = ts
-                if labels_json is None:
-                    labels_json = lj
-                w = ts - ts % iv
-                prev = (
-                    self._series.getValue(sk)
-                    if self._series.containsKey(sk)
-                    else None
-                )
-                pos_dv = None
-                dt_ms = None
-                if prev is not None:
-                    lts, lv = int(prev[0]), float(prev[1])
-                    if staleness and ts - lts > staleness:
-                        prev = None  # staleness reset → first sample again
-                    else:
-                        pos_dv = v - lv if v >= lv else v
-                        dt_ms = ts - lts
-                if prev is None:
-                    contrib_keep = v if (warmup == 0 or ts >= t0 + warmup) else None
-                else:
-                    contrib_keep = pos_dv
-                self._series.updateValue(sk, (ts, v))
-
-                cur = (
-                    self._win.getValue(w)
-                    if self._win.containsKey(w)
-                    else (0.0, 0, 0.0, 0, 0.0, 0.0, 0)
-                )
-                inc, n_inc, inc_keep, n_keep, ss, rate_sum, nser = cur
-                if pos_dv is not None:
-                    inc += pos_dv
-                    n_inc += 1
-                    if dt_ms and dt_ms > 0:
-                        rate_sum += pos_dv / (dt_ms / 1000.0)
-                    marker = f"{w}|{sk}"
-                    if not self._wser.containsKey(marker):
-                        self._wser.updateValue(marker, (1,))
-                        nser += 1
-                if contrib_keep is not None:
-                    inc_keep += contrib_keep
-                    n_keep += 1
-                ss += v
-                self._win.updateValue(
-                    w, (inc, n_inc, inc_keep, n_keep, ss, rate_sum, nser)
-                )
-                self._handle.registerTimer(w + iv)
-            self._meta.update((t0, labels_json))
-            return iter(())
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            import pandas as pd
-
-            expiry = expired_timer_info.getExpiryTimeInMs()
-            ready = sorted(
-                w for w in (k[0] for k in self._win.keys()) if w + iv <= expiry
-            )
-            if not ready:
-                return iter(())
-            tot = (
-                self._totals.get()
-                if self._totals.exists()
-                else (0.0, 0.0, 0.0)
-            )
-            total, total_prom, ss_total = tot
-            meta = self._meta.get()
-            labels_json = meta[1] if meta else "{}"
-            name = key[0]
-            out = []
-
-            def emit(output, w_end, value):
-                if value is None:
-                    return
-                out.append((self._out_name(name, output), labels_json, w_end, float(value)))
-
-            for w in ready:
-                inc, n_inc, inc_keep, n_keep, ss, rate_sum, nser = (
-                    self._win.getValue(w)
-                )
-                total += inc_keep
-                total_prom += inc
-                ss_total += ss
-                w_end = w + iv
-                for o in out_names:
-                    if o == "total":
-                        emit(o, w_end, total)
-                    elif o == "total_prometheus":
-                        emit(o, w_end, total_prom)
-                    elif o == "increase":
-                        emit(o, w_end, inc_keep if n_keep else None)
-                    elif o == "increase_prometheus":
-                        emit(o, w_end, inc if n_inc else None)
-                    elif o == "sum_samples_total":
-                        emit(o, w_end, ss_total)
-                    elif o == "rate_sum":
-                        emit(o, w_end, rate_sum if n_inc else None)
-                    elif o == "rate_avg":
-                        emit(o, w_end, rate_sum / nser if nser else None)
-                self._win.removeKey(w)
-                for (mk,) in list(self._wser.keys()):
-                    if mk.startswith(f"{w}|"):
-                        self._wser.removeKey(mk)
-            self._totals.update((total, total_prom, ss_total))
-            yield pd.DataFrame(
-                out, columns=["name", "labels_json", "ts", "value"]
-            )
-
-        @staticmethod
-        def _out_name(name: str, output: str) -> str:
-            return name if keep_names else f"{name}{sfx}{output}"
-
-        def close(self) -> None:
-            pass
-
-    return CounterProcessor
-
-
-def aggregate_stream_stateful(
-    sdf: DataFrame,
-    cfg: StreamAggrConfig,
-    ts_col: str = "ts",
-    allowed_lateness_ms: int = 0,
-) -> DataFrame:
-    """Structured-Streaming counters (total / increase / rate_* family)
-    with REAL per-series state: transformWithStateInPandas keyed by
-    (name, group-labels), event-time timers flush each tumbling interval
-    once the watermark passes its end, cumulative totals survive across
-    flushes in the state store. Semantics match ``aggregate_batch`` row
-    for row on in-order replay (the pytest asserts byte-equality), with
-    one documented divergence: the warmup deadline (ignore_first_sample)
-    is anchored per aggregation group, not at the global batch minimum —
-    a stream has no global minimum."""
-    stateful = [o for o in cfg.outputs if o in STATEFUL_OUTPUTS]
-    if not stateful:
-        raise ValueError("aggregate_stream_stateful: no stateful outputs in cfg")
-    if cfg.dedup_interval_ms:
-        sdf = dedup_samples_stream(sdf, cfg.dedup_interval_ms)
-
-    d = (
-        sdf.withColumn("__event_time", F.timestamp_millis(F.col(ts_col)))
-        .withWatermark(
-            "__event_time", f"{max(allowed_lateness_ms, 0)} milliseconds"
-        )
-        .withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-        .withColumn("__glabels", _group_labels(cfg))
-        .withColumn("__gkey", canonical_labels_str(F.col("__glabels")))
-        .withColumn("__labels_json", F.to_json(F.col("__glabels")))
-        .select(
-            "name",
-            "__gkey",
-            F.col("__sk"),
-            F.col("ts"),
-            F.col("value"),
-            F.col("__labels_json").alias("labels_json"),
-            "__event_time",
-        )
-    )
-    proc = _make_counter_processor(cfg, stateful)
-    out = d.groupBy("name", "__gkey").transformWithStateInPandas(
-        statefulProcessor=proc(),
-        outputStructType=_TWS_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-    return out.select(
-        F.col("name"),
-        F.from_json(F.col("labels_json"), "map<string,string>").alias("labels"),
-        F.col("ts"),
-        F.col("value"),
-    )
-
-
 def aggregate_stream_pandas_state(
     sdf: DataFrame,
     cfg: StreamAggrConfig,
     ts_col: str = "ts",
     allowed_lateness_ms: int = 0,
 ) -> DataFrame:
-    """Structured-Streaming counters over ``applyInPandasWithState`` —
-    the stateful-streaming engine that RUNS in this environment (the
-    transformWithStateInPandas variant above needs the protobuf runtime
-    in Spark's Python state workers, absent here; this API's state
-    channel is protobuf-free and verified working, so the stateful
-    streaming path is no longer environment-blocked).
+    """Structured-Streaming counters (total / increase / rate_* family)
+    over ``applyInPandasWithState``: ``aggregate_batch``'s counter
+    outputs with per-group state in Spark's checkpointed state store, so
+    a restarted query resumes from its checkpoint and a replayed
+    micro-batch starts from the last committed state.
 
-    Identical per-group computation to the TWS processor
-    (_make_counter_processor): per-series (last_ts, last_value) carries
-    positive-delta counter semantics across micro-batches with the
-    staleness reset, tumbling ``interval_ms`` windows accumulate
-    (inc, inc_keep, ss, rate_sum, nser), and a window flushes on the
-    first batch whose event-time watermark passed its end — emitting
-    the configured total/increase/rate outputs with cumulative totals
-    surviving in the state store. State is one GroupState per
-    (name, group-labels) key; the series/window maps ride as JSON
-    strings inside it (GroupState schemas are flat rows; the maps are
-    group-local and presentation-sized — VM itself keeps exactly this
-    per-output in-memory map, streamaggr.go:175-209).
+    One GroupState per (name, group-labels) key holds the per-series
+    (last_ts, last_value) pairs that carry positive-delta counter
+    semantics and the staleness reset across micro-batches, the open
+    tumbling ``interval_ms`` windows' partials (inc, inc_keep, ss,
+    rate_sum, contributing series) and the cumulative totals. The
+    series/window maps ride as JSON strings inside the flat state row
+    (VM keeps the same per-output in-memory map,
+    streamaggr.go:175-209).
 
-    Divergence from the batch engine, documented like the TWS one: the
-    warmup deadline (ignore_first_sample) anchors per aggregation
-    group, not at the global batch minimum."""
+    Event time is window-aligned: each row's event time is the END of
+    its ``interval_ms`` window, with a watermark delay of one interval
+    plus ``allowed_lateness_ms``, so the watermark trails the start of
+    the newest window seen by ``allowed_lateness_ms``. A window flushes
+    once the watermark reaches its end, and Spark drops a row as late
+    (under event-time timeouts) exactly when its window has flushed —
+    never a row of a still-open window, whatever its order within the
+    window or across micro-batches. With the default 0 only the newest
+    window is open, like VM dropping samples older than the current
+    flush window. The group's event-time timeout is its earliest open
+    window end, so an idle group flushes without new samples of its
+    own, like VM's interval flusher; one far-future sample of any
+    series therefore ends a replay.
+
+    Divergence from the batch engine: the warmup deadline
+    (ignore_first_sample) anchors per aggregation group, not at the
+    global batch minimum — a stream has no global minimum."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     stateful = [o for o in cfg.outputs if o in STATEFUL_OUTPUTS]
@@ -663,10 +435,15 @@ def aggregate_stream_pandas_state(
     if cfg.dedup_interval_ms:
         sdf = dedup_samples_stream(sdf, cfg.dedup_interval_ms)
 
+    iv = cfg.interval_ms
+    ts = F.col(ts_col)
     d = (
-        sdf.withColumn("__event_time", F.timestamp_millis(F.col(ts_col)))
+        sdf.withColumn(
+            "__event_time",
+            F.timestamp_millis(ts - F.pmod(ts, F.lit(iv)) + F.lit(iv)),
+        )
         .withWatermark(
-            "__event_time", f"{max(allowed_lateness_ms, 0)} milliseconds"
+            "__event_time", f"{iv + max(allowed_lateness_ms, 0)} milliseconds"
         )
         .withColumn("__sk", series_key(F.col("name"), F.col("labels")))
         .withColumn("__glabels", _group_labels(cfg))
@@ -679,10 +456,8 @@ def aggregate_stream_pandas_state(
         )
     )
 
-    iv = cfg.interval_ms
     staleness = cfg.staleness_interval_ms or 0
     warmup = cfg.ignore_first_sample_interval_ms or 0
-    out_names = list(stateful)
     sfx = cfg.suffix()
     keep_names = cfg.keep_metric_names
     state_schema = (
@@ -705,6 +480,7 @@ def aggregate_stream_pandas_state(
             )
             series, wins = {}, {}
 
+        # a timed-out call brings no rows: it only flushes
         for pdf in pdfs:
             pdf = pdf.sort_values("ts", kind="mergesort")
             for sk, ts, v, lj in zip(
@@ -748,22 +524,17 @@ def aggregate_stream_pandas_state(
                 ss += v
                 wins[w] = [inc, n_inc, inc_keep, n_keep, ss, rate_sum, sks]
 
-        # flush windows the event-time watermark has passed
+        # flush windows the event-time watermark has reached
         wm = state.getCurrentWatermarkMs()
         out = []
         name = key[0]
-
-        def oname(output):
-            return name if keep_names else f"{name}{sfx}{output}"
-
         for w in sorted(k for k in wins if k + iv <= wm):
             inc, n_inc, inc_keep, n_keep, ss, rate_sum, sks = wins.pop(w)
             total += inc_keep
             total_prom += inc
             ss_total += ss
-            w_end = w + iv
             nser = len(sks)
-            for o in out_names:
+            for o in stateful:
                 if o == "total":
                     val = total
                 elif o == "total_prometheus":
@@ -779,9 +550,12 @@ def aggregate_stream_pandas_state(
                 else:  # rate_avg
                     val = rate_sum / nser if nser else None
                 if val is not None:
-                    out.append(
-                        (oname(o), labels_json or "{}", w_end, float(val))
-                    )
+                    out.append((
+                        name if keep_names else f"{name}{sfx}{o}",
+                        labels_json or "{}",
+                        w + iv,
+                        float(val),
+                    ))
 
         state.update(
             (
@@ -794,16 +568,22 @@ def aggregate_stream_pandas_state(
                 _json.dumps({str(k): v for k, v in wins.items()}),
             )
         )
+        if wins:
+            # the timeout is cleared on every call: re-arm it so it
+            # fires once the watermark reaches the earliest open window
+            # end (Spark times a group out when its timeout < watermark;
+            # end - 1 >= wm, since older windows flushed)
+            state.setTimeoutTimestamp(min(wins) + iv - 1)
         yield pd.DataFrame(
             out, columns=["name", "labels_json", "ts", "value"]
         )
 
     out = d.groupBy("name", "__gkey").applyInPandasWithState(
         fn,
-        _TWS_OUTPUT_SCHEMA,
+        "name string, labels_json string, ts long, value double",
         state_schema,
         "append",
-        GroupStateTimeout.NoTimeout,
+        GroupStateTimeout.EventTimeTimeout,
     )
     return out.select(
         F.col("name"),
@@ -837,355 +617,3 @@ def dedup_samples_stream(sdf: DataFrame, dedup_interval_ms: int) -> DataFrame:
             F.lit(False).alias("is_stale"),
         )
     )
-
-
-# ------------------------------------------------------------------ round 6:
-# micro-batch stateful counters (foreachBatch). transformWithState needs
-# the google.protobuf runtime inside Spark's TWS driver worker; where
-# that is unavailable, aggregate_stream_pandas_state above (GroupState,
-# protobuf-free, verified running here) or this engine provide the same
-# semantics — this one with state as parquet tables, which is ALSO the
-# shape VM itself has
-# (pushSample into per-series state, flush on interval ticks,
-# streamaggr.go:175-209). Every step is a DataFrame op: state merge is a
-# per-series max-struct aggregation, window partials merge additively,
-# flush order is a window function — nothing driver-side scales with
-# series count, so the state tables can be bucketed by series hash at
-# 100 TB exactly like the sample data.
-
-
-class MicroBatchCounterAggregator:
-    """Stateful streamaggr counters over foreachBatch.
-
-    Usage::
-
-        agg = MicroBatchCounterAggregator(spark, cfg, state_dir)
-        q = samples_stream.writeStream.foreachBatch(
-            lambda df, _id: agg.process(df)).start()
-
-    ``process`` returns the rows flushed by this batch (windows whose
-    end the watermark has passed); ``flush_all()`` force-flushes the
-    rest (end of replay)."""
-
-    def __init__(self, spark, cfg: StreamAggrConfig, state_dir: str):
-        import os
-
-        self.spark = spark
-        self.cfg = cfg
-        self.state_dir = state_dir
-        self.outputs = [o for o in cfg.outputs if o in STATEFUL_OUTPUTS]
-        if not self.outputs:
-            raise ValueError("no stateful outputs configured")
-        os.makedirs(state_dir, exist_ok=True)
-        self._emitted = []
-
-    # ---------------------------------------------------------- state io
-    def _path(self, name: str) -> str:
-        return f"{self.state_dir}/{name}.parquet"
-
-    def _read(self, name: str, schema: str):
-        import os
-
-        p = self._path(name)
-        if os.path.exists(p):
-            self.spark.catalog.refreshByPath(p)
-            # detach from the files so this batch's overwrite of the same
-            # state table can't invalidate a still-lazy plan (production
-            # deployments would version the state dir per batch instead)
-            return self.spark.read.schema(schema).parquet(p).localCheckpoint()
-        return self.spark.createDataFrame([], schema)
-
-    def _write(self, df, name: str) -> None:
-        p = self._path(name)
-        df.write.mode("overwrite").parquet(p)
-        self.spark.catalog.refreshByPath(p)
-
-    _SERIES = "sk string, name string, gkey string, labels_json string, last_ts long, last_value double"
-    _WIN = (
-        "name string, gkey string, labels_json string, w long, inc double, "
-        "n_inc long, inc_keep double, n_keep long, ss double, rate_sum double"
-    )
-    _WSER = "name string, gkey string, w long, sk string"
-    _TOTALS = (
-        "name string, gkey string, total double, total_prom double, ss_total double"
-    )
-    _META = "watermark long, t0 long"
-
-    # ---------------------------------------------------------- process
-    def process(self, batch_df: DataFrame):
-        cfg = self.cfg
-        iv = cfg.interval_ms
-        if cfg.dedup_interval_ms:
-            batch_df = dedup_samples(batch_df, cfg.dedup_interval_ms)
-        d = (
-            batch_df.withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-            .withColumn("__glabels", _group_labels(cfg))
-            .withColumn("__gkey", canonical_labels_str(F.col("__glabels")))
-            .withColumn("__labels_json", F.to_json(F.col("__glabels")))
-            .withColumn("__w", F.col("ts") - F.col("ts") % F.lit(iv))
-        )
-
-        series = self._read("series", self._SERIES)
-        # virtual predecessor rows from state, then the batch's own rows
-        state_rows = series.select(
-            F.col("sk").alias("__sk"),
-            F.col("name"),
-            F.col("gkey").alias("__gkey"),
-            F.col("labels_json").alias("__labels_json"),
-            F.col("last_ts").alias("ts"),
-            F.col("last_value").alias("value"),
-            F.lit(None).cast("long").alias("__w"),
-            F.lit(True).alias("__from_state"),
-        )
-        cur_rows = d.select(
-            "__sk",
-            "name",
-            "__gkey",
-            "__labels_json",
-            "ts",
-            "value",
-            "__w",
-            F.lit(False).alias("__from_state"),
-        )
-        u = state_rows.unionByName(cur_rows)
-        wser_w = Window.partitionBy("__sk").orderBy(
-            "ts", F.col("__from_state").desc()
-        )
-        dd = (
-            u.withColumn("__pv", F.lag("value").over(wser_w))
-            .withColumn("__pts", F.lag("ts").over(wser_w))
-            .filter(~F.col("__from_state"))
-            .withColumn(
-                "__pos_dv",
-                F.when(F.col("__pv").isNull(), F.lit(None).cast("double"))
-                .when(F.col("value") >= F.col("__pv"), F.col("value") - F.col("__pv"))
-                .otherwise(F.col("value")),
-            )
-        )
-        is_first = F.col("__pv").isNull()
-        if cfg.staleness_interval_ms:
-            stale_gap = (
-                F.col("ts") - F.col("__pts") > F.lit(cfg.staleness_interval_ms)
-            )
-            dd = dd.withColumn(
-                "__pos_dv",
-                F.when(stale_gap, F.lit(None).cast("double")).otherwise(
-                    F.col("__pos_dv")
-                ),
-            )
-            is_first = is_first | stale_gap
-
-        meta = self._read("meta", self._META).collect()
-        wm_prev = meta[0]["watermark"] if meta else None
-        t0_prev = meta[0]["t0"] if meta else None
-        batch_minmax = d.agg(
-            F.min("ts").alias("mn"), F.max("ts").alias("mx")
-        ).collect()[0]
-        t0 = (
-            t0_prev
-            if t0_prev is not None
-            else (int(batch_minmax["mn"]) if batch_minmax["mn"] is not None else None)
-        )
-        if cfg.ignore_first_sample_interval_ms > 0 and t0 is not None:
-            eligible = F.col("ts") >= F.lit(t0 + cfg.ignore_first_sample_interval_ms)
-        else:
-            eligible = F.lit(True)
-        dd = dd.withColumn(
-            "__contrib_keep",
-            F.when(is_first, F.when(eligible, F.col("value"))).otherwise(
-                F.col("__pos_dv")
-            ),
-        )
-
-        # merge window partials (additive)
-        new_partials = dd.groupBy("name", "__gkey", "__w").agg(
-            F.first("__labels_json").alias("labels_json"),
-            F.sum("__pos_dv").alias("inc"),
-            F.count("__pos_dv").alias("n_inc"),
-            F.sum("__contrib_keep").alias("inc_keep"),
-            F.count("__contrib_keep").alias("n_keep"),
-            F.sum("value").alias("ss"),
-            F.sum(
-                F.try_divide(
-                    F.col("__pos_dv"), (F.col("ts") - F.col("__pts")) / 1000.0
-                )
-            ).alias("rate_sum"),
-        ).select(
-            "name",
-            F.col("__gkey").alias("gkey"),
-            "labels_json",
-            F.col("__w").alias("w"),
-            F.coalesce("inc", F.lit(0.0)).alias("inc"),
-            "n_inc",
-            F.coalesce("inc_keep", F.lit(0.0)).alias("inc_keep"),
-            "n_keep",
-            "ss",
-            F.coalesce("rate_sum", F.lit(0.0)).alias("rate_sum"),
-        )
-        win = self._read("win", self._WIN).unionByName(new_partials)
-        win = win.groupBy("name", "gkey", "w").agg(
-            F.first("labels_json").alias("labels_json"),
-            F.sum("inc").alias("inc"),
-            F.sum("n_inc").alias("n_inc"),
-            F.sum("inc_keep").alias("inc_keep"),
-            F.sum("n_keep").alias("n_keep"),
-            F.sum("ss").alias("ss"),
-            F.sum("rate_sum").alias("rate_sum"),
-        ).select(
-            "name", "gkey", "labels_json", "w", "inc", "n_inc", "inc_keep",
-            "n_keep", "ss", "rate_sum",
-        )
-
-        # distinct contributing series per window (exact across batches)
-        new_wser = (
-            dd.filter(F.col("__pos_dv").isNotNull())
-            .select(
-                "name",
-                F.col("__gkey").alias("gkey"),
-                F.col("__w").alias("w"),
-                F.col("__sk").alias("sk"),
-            )
-            .distinct()
-        )
-        wser = self._read("wser", self._WSER).unionByName(new_wser).distinct()
-
-        # update per-series last (ts, value): max struct of old + new
-        merged_series = (
-            series.select(
-                F.col("sk"), "name", "gkey", "labels_json",
-                F.struct(F.col("last_ts").alias("ts"), F.col("last_value").alias("value")).alias("__s"),
-            )
-            .unionByName(
-                d.select(
-                    F.col("__sk").alias("sk"),
-                    "name",
-                    F.col("__gkey").alias("gkey"),
-                    F.col("__labels_json").alias("labels_json"),
-                    F.struct(F.col("ts"), F.col("value")).alias("__s"),
-                )
-            )
-            .groupBy("sk")
-            .agg(
-                F.first("name").alias("name"),
-                F.first("gkey").alias("gkey"),
-                F.first("labels_json").alias("labels_json"),
-                F.max("__s").alias("__s"),
-            )
-            .select(
-                "sk", "name", "gkey", "labels_json",
-                F.col("__s.ts").alias("last_ts"),
-                F.col("__s.value").alias("last_value"),
-            )
-        )
-        self._write(merged_series, "series")
-
-        wm = int(batch_minmax["mx"]) if batch_minmax["mx"] is not None else wm_prev
-        if wm_prev is not None and wm is not None:
-            wm = max(wm, wm_prev)
-        self._write(
-            self.spark.createDataFrame([(wm, t0)], self._META), "meta"
-        )
-        return self._flush(win, wser, watermark=wm)
-
-    def flush_all(self):
-        """End-of-replay: flush every pending window."""
-        win = self._read("win", self._WIN)
-        wser = self._read("wser", self._WSER)
-        return self._flush(win, wser, watermark=None)
-
-    def _flush(self, win, wser, watermark):
-        cfg = self.cfg
-        iv = cfg.interval_ms
-        if watermark is None:
-            ready = win
-            rest = win.filter(F.lit(False))
-        else:
-            ready = win.filter(F.col("w") + iv <= F.lit(watermark))
-            rest = win.filter(F.col("w") + iv > F.lit(watermark))
-        nser = wser.groupBy("name", "gkey", "w").agg(
-            F.count_distinct("sk").alias("nser")
-        )
-        ready = ready.join(nser, ["name", "gkey", "w"], "left").withColumn(
-            "nser", F.coalesce("nser", F.lit(0))
-        )
-
-        totals = self._read("totals", self._TOTALS)
-        ready = ready.join(totals, ["name", "gkey"], "left").fillna(
-            {"total": 0.0, "total_prom": 0.0, "ss_total": 0.0}
-        )
-        wrun = (
-            Window.partitionBy("name", "gkey")
-            .orderBy("w")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        ready = (
-            ready.withColumn(
-                "__total", F.col("total") + F.sum("inc_keep").over(wrun)
-            )
-            .withColumn(
-                "__total_prom", F.col("total_prom") + F.sum("inc").over(wrun)
-            )
-            .withColumn("__ss_total", F.col("ss_total") + F.sum("ss").over(wrun))
-        ).cache()
-
-        outs = []
-        flush_ts = (F.col("w") + F.lit(iv)).alias("ts")
-        labels = F.from_json(F.col("labels_json"), "map<string,string>").alias(
-            "labels"
-        )
-        for o in self.outputs:
-            if o == "total":
-                val, cond = F.col("__total"), F.lit(True)
-            elif o == "total_prometheus":
-                val, cond = F.col("__total_prom"), F.lit(True)
-            elif o == "increase":
-                val, cond = F.col("inc_keep"), F.col("n_keep") > 0
-            elif o == "increase_prometheus":
-                val, cond = F.col("inc"), F.col("n_inc") > 0
-            elif o == "sum_samples_total":
-                val, cond = F.col("__ss_total"), F.lit(True)
-            elif o == "rate_sum":
-                val, cond = F.col("rate_sum"), F.col("n_inc") > 0
-            else:  # rate_avg
-                val, cond = (
-                    F.try_divide(F.col("rate_sum"), F.col("nser")),
-                    F.col("nser") > 0,
-                )
-            outs.append(
-                ready.filter(cond).select(
-                    _out_name(cfg, o).alias("name"), labels, flush_ts,
-                    val.cast("double").alias("value"),
-                ).filter(F.col("value").isNotNull() & ~F.isnan("value"))
-            )
-        emitted = outs[0]
-        for o in outs[1:]:
-            emitted = emitted.unionByName(o)
-        # materialize executor-side BEFORE the state `_write`s below
-        # overwrite the backing tables this plan reads: localCheckpoint
-        # keeps the flushed rows as cached partitions on the executors
-        # (constant driver memory) instead of a driver round-trip via
-        # collect()+createDataFrame
-        emitted = emitted.localCheckpoint(eager=True)
-
-        # persist advanced totals + surviving windows, drop flushed wser
-        new_totals = (
-            ready.groupBy("name", "gkey")
-            .agg(
-                F.max_by(F.col("__total"), F.col("w")).alias("total"),
-                F.max_by(F.col("__total_prom"), F.col("w")).alias("total_prom"),
-                F.max_by(F.col("__ss_total"), F.col("w")).alias("ss_total"),
-            )
-        )
-        kept_totals = totals.join(
-            new_totals.select("name", "gkey"), ["name", "gkey"], "left_anti"
-        )
-        self._write(kept_totals.unionByName(new_totals), "totals")
-        self._write(rest, "win")
-        if watermark is None:
-            self._write(wser.filter(F.lit(False)), "wser")
-        else:
-            self._write(
-                wser.filter(F.col("w") + iv > F.lit(watermark)), "wser"
-            )
-        ready.unpersist()
-        return emitted
