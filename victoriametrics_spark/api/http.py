@@ -27,6 +27,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from victoriametrics_spark.engine.evalcfg import EvalConfig
 from victoriametrics_spark.engine.planner import evaluate
@@ -3362,15 +3363,25 @@ def _go_layout_to_java(layout: str) -> "str | None":
     return "".join(out) or None
 
 
+# one-column request frames: body lines or documents, and binary bodies
+_VALUE_SCHEMA = StructType([StructField("value", StringType())])
+_BODY_SCHEMA = StructType([StructField("body", BinaryType())])
+
+
 class IngestAPI:
     """Write-side API — the vminsert surface (app/vminsert/main.go
     request routing) over the existing streaming parsers, appending into
     the bucketed sample / log tables (storage/layout.py).
 
-    HTTP bodies are presentation-sized; each request parallelizes its
-    parse over the body's lines and appends through the same
-    write path batch backfill uses — bulk loads should go straight to
-    the batch jobs instead."""
+    HTTP bodies are presentation-sized and already in driver memory.
+    Every request frame is built from a pyarrow Table, so it plans as a
+    LocalTableScan and no Python worker unpickles rows on each action.
+    Remote-write and OTLP bodies decode on the driver, as the
+    reference's request handlers do; the other dialects parse the body's
+    lines (or its one document) in Spark. Rows append through the same
+    write path batch backfill uses, and on the default table path the
+    acknowledged count is observed on that append — bulk loads should go
+    straight to the batch jobs instead."""
 
     def __init__(
         self,
@@ -3479,9 +3490,29 @@ class IngestAPI:
             self.tenant = parse_tenant(tenant) if tenant is not None else None
 
     # --------------------------------------------------------- helpers
+    def _arrow_df(self, schema: StructType, columns) -> DataFrame:
+        """Request frame from driver-side columns. A pyarrow Table plans
+        as a LocalTableScan; a list of tuples would be unpickled in a
+        Python worker on every action over the frame."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+            schema=arrow,
+        )
+        return self.spark.createDataFrame(table, schema)
+
+    def _value_df(self, values: list) -> DataFrame:
+        """One string ``value`` row per element: body lines, or a whole
+        document."""
+        return self._arrow_df(_VALUE_SCHEMA, [values])
+
     def _lines_df(self, body: str) -> DataFrame:
-        rows = [(ln,) for ln in body.splitlines() if ln.strip()]
-        return self.spark.createDataFrame(rows or [("",)], ["value"])
+        return self._value_df(
+            [ln for ln in body.splitlines() if ln.strip()] or [""]
+        )
 
     def ingest_json(self, body: str, dialect: str, extra_labels=None) -> int:
         """POST JSON-document ingestion dialects (one payload document
@@ -3569,9 +3600,7 @@ class IngestAPI:
             try:
                 samples, mms = decode_otlp_json(doc, **otlp_kw)
             except Exception as e:
-                self.read_errors_total["opentelemetry"] = (
-                    self.read_errors_total.get("opentelemetry", 0) + 1
-                )
+                self._count_read_error("opentelemetry")
                 raise ValueError(
                     f"cannot decode OTLP JSON payload: {e}"
                 ) from None
@@ -3582,9 +3611,8 @@ class IngestAPI:
             return self._write_samples(
                 self._samples_df(samples), extra_labels=extra_labels
             )
-        docs = self.spark.createDataFrame([(body,)], ["value"])
         return self._write_samples(
-            fns[dialect](docs), extra_labels=extra_labels
+            fns[dialect](self._value_df([body])), extra_labels=extra_labels
         )
 
     def _samples_df(self, samples) -> DataFrame:
@@ -3592,9 +3620,8 @@ class IngestAPI:
         canonical samples frame."""
         from victoriametrics_spark.schema import SAMPLE_SCHEMA
 
-        return self.spark.createDataFrame(
-            [tuple(s) for s in samples], SAMPLE_SCHEMA
-        )
+        columns = list(zip(*samples)) or [[]] * len(SAMPLE_SCHEMA.fields)
+        return self._arrow_df(SAMPLE_SCHEMA, columns)
 
     def ingest_otlp_pb(self, body: bytes, extra_labels=None) -> int:
         """OTLP/HTTP protobuf metrics (the default OTLP exporter wire
@@ -3611,9 +3638,7 @@ class IngestAPI:
         try:
             samples, mms = decode_otlp_pb(body, **otlp_kw)
         except Exception:
-            self.read_errors_total["opentelemetry"] = (
-                self.read_errors_total.get("opentelemetry", 0) + 1
-            )
+            self._count_read_error("opentelemetry")
             raise ValueError("cannot decode OTLP protobuf payload") from None
         try:
             self.metadata_store.add(mms, tenant=self._metadata_tenant())
@@ -3630,9 +3655,7 @@ class IngestAPI:
             sketches_to_samples,
         )
 
-        payloads = self.spark.createDataFrame(
-            [(bytearray(raw),)], "body binary"
-        )
+        payloads = self._arrow_df(_BODY_SCHEMA, [[bytes(raw)]])
         return self._write_samples(
             sketches_to_samples(
                 payloads,
@@ -3723,14 +3746,24 @@ class IngestAPI:
             )
         elif self.tenant is not None:
             df = with_tenant(df, self.tenant)
-        n = df.count()
         if self.sink is not None:
+            # a custom sink need not run the frame, so count it here
+            n = df.count()
             self.sink(df, "samples")
-        elif self.samples_table:
-            from victoriametrics_spark.storage.layout import append_samples
+            return n
+        if not self.samples_table:
+            return df.count()
+        from pyspark.sql import Observation
 
-            append_samples(df, self.samples_table)
-        return n
+        from victoriametrics_spark.storage.layout import append_samples
+
+        # the acknowledged count comes from the append itself: it is the
+        # one action over the frame on this path
+        obs = Observation()
+        append_samples(
+            df.observe(obs, F.count(F.lit(1)).alias("n")), self.samples_table
+        )
+        return obs.get["n"]
 
     def _apply_series_limiters(self, df: DataFrame) -> DataFrame:
         """registerSeriesCardinality (storage.go:2151-2167): the
@@ -3784,36 +3817,44 @@ class IngestAPI:
     def write_remote(self, body: bytes, encoding: str = "") -> int:
         """POST /api/v1/write — protobuf remote write; snappy or zstd
         compressed with the reference's bidirectional fallback
-        (promremotewrite/stream/streamparser.go:42-77). Decompression
-        failures count into vm_protoparser_read_errors_total and
+        (promremotewrite/stream/streamparser.go:42-77). The body is
+        decoded once, on the driver, like the reference's request
+        handler: one body is one payload, so a Spark job would decode it
+        in a single task anyway. Decompression and decode failures
+        count into vm_protoparser_read_errors_total, write nothing and
         surface as HTTP errors (415 when the body is zstd and no
         binding exists, 400 otherwise)."""
-        from victoriametrics_spark.streaming.remotewrite import (
-            decode_write_request_metadata,
-            remote_write_to_samples,
-            rw_uncompress,
-        )
+        from victoriametrics_spark.streaming import remotewrite as rw
 
         try:
-            raw = rw_uncompress(body, encoding)
+            raw = rw.rw_uncompress(body, encoding)
         except Exception:
-            self.read_errors_total["promremotewrite"] = (
-                self.read_errors_total.get("promremotewrite", 0) + 1
-            )
+            self._count_read_error("promremotewrite")
             raise
         try:
+            samples = [
+                (name, labels, ts, val, rw.is_stale_nan(val))
+                for name, labels, ts, val in rw.decode_write_request(
+                    raw, compressed=False
+                )
+            ]
+        except Exception as e:
+            self._count_read_error("promremotewrite")
+            raise ValueError(
+                f"cannot decode remote-write request: {e}"
+            ) from None
+        try:
             self.metadata_store.add(
-                decode_write_request_metadata(raw, compressed=False),
+                rw.decode_write_request_metadata(raw, compressed=False),
                 tenant=self._metadata_tenant(),
             )
         except Exception:
             pass  # metadata is best-effort; samples still land
-        payloads = self.spark.createDataFrame([(bytearray(raw),)], "payload binary")
-        # decode once: the count and the append share the checkpoint
-        return self._write_samples(
-            remote_write_to_samples(payloads, compressed=False).localCheckpoint(
-                eager=True
-            )
+        return self._write_samples(self._samples_df(samples))
+
+    def _count_read_error(self, protocol: str) -> None:
+        self.read_errors_total[protocol] = (
+            self.read_errors_total.get(protocol, 0) + 1
         )
 
     def _metadata_tenant(self):
@@ -4217,9 +4258,7 @@ class IngestAPI:
                 time_field=time_field or "@timestamp",
             )
         elif dialect == "loki":
-            df = L.parse_loki_push(
-                self.spark.createDataFrame([(body,)], ["value"])
-            )
+            df = L.parse_loki_push(self._value_df([body]))
         elif dialect == "syslog":
             import datetime as _dt
 
@@ -4230,9 +4269,7 @@ class IngestAPI:
                 self._lines_df(body), year=recv.year
             )
         elif dialect == "opentelemetry":
-            df = L.parse_otlp_logs(
-                self.spark.createDataFrame([(body,)], ["value"])
-            )
+            df = L.parse_otlp_logs(self._value_df([body]))
         else:
             raise ValueError(f"unknown log dialect {dialect!r}")
         # rows whose protocol timestamp is absent/unparseable get the

@@ -11,11 +11,13 @@ snappy-compressed protobuf:
 
 Both snappy (block format) and this 4-message protobuf schema are small,
 stable public formats, so they are decoded here directly — no external
-dependency. Spark-side, payload blobs decode inside ``mapInPandas``
-(Arrow-batched; protobuf is an opaque binary format, the one case where
-Python in the path is genuinely unavoidable) into the canonical sample
-schema, so a stream of remote-write bodies feeds the same engine as
-every text dialect in parsers.py.
+dependency. An HTTP request body is already in driver memory, so
+``IngestAPI.write_remote`` decodes it there with
+:func:`decode_write_request`, like the reference's request handler
+(stream/streamparser.go). A stream of payload blobs decodes inside
+``mapInPandas`` instead (:func:`remote_write_to_samples`, Arrow-batched)
+into the canonical sample schema, so it feeds the same engine as every
+text dialect in parsers.py.
 """
 
 from __future__ import annotations
@@ -165,9 +167,7 @@ _STALE_NAN_BYTES = struct.pack("<Q", 0x7FF0000000000002)
 def is_stale_nan(val: float) -> bool:
     """Prometheus staleness marker: the specific NaN bit pattern
     (decimal.StaleNaN). Bit-compare — ordinary NaNs are data."""
-    import math as _math
-
-    return _math.isnan(val) and struct.pack("<d", val) == _STALE_NAN_BYTES
+    return val != val and struct.pack("<d", val) == _STALE_NAN_BYTES
 
 
 def snappy_compress(data: bytes) -> bytes:
@@ -194,13 +194,16 @@ def snappy_compress(data: bytes) -> bytes:
 
 def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
     result = shift = 0
-    while True:
-        b = data[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
+    try:
+        while True:
+            b = data[pos]
+            pos += 1
+            result |= (b & 0x7F) << shift
+            if not b & 0x80:
+                return result, pos
+            shift += 7
+    except IndexError:
+        raise ValueError("unexpected end of data inside a varint") from None
 
 
 def _uvarint_encode(v: int) -> bytes:
@@ -217,7 +220,11 @@ def _uvarint_encode(v: int) -> bytes:
 
 # ------------------------------------------------------------- protobuf
 def _fields(data: bytes) -> Iterator[tuple[int, int, bytes | int]]:
-    """Yield (field_no, wire_type, value) for a protobuf message body."""
+    """Yield (field_no, wire_type, value) for a protobuf message body.
+
+    A field that runs past the end of its message raises ValueError, as
+    the reference's unmarshaler (lib/prompb) rejects it, so a body cut
+    off mid-message fails whole instead of landing in part."""
     pos, n = 0, len(data)
     while pos < n:
         key, pos = _uvarint(data, pos)
@@ -225,18 +232,23 @@ def _fields(data: bytes) -> Iterator[tuple[int, int, bytes | int]]:
         if wt == 0:  # varint
             v, pos = _uvarint(data, pos)
             yield field, wt, v
-        elif wt == 1:  # fixed64
-            yield field, wt, data[pos : pos + 8]
-            pos += 8
+            continue
+        if wt == 1:  # fixed64
+            ln = 8
         elif wt == 2:  # length-delimited
             ln, pos = _uvarint(data, pos)
-            yield field, wt, data[pos : pos + ln]
-            pos += ln
         elif wt == 5:  # fixed32
-            yield field, wt, data[pos : pos + 4]
-            pos += 4
+            ln = 4
         else:
             raise ValueError(f"unsupported wire type {wt}")
+        end = pos + ln
+        if end > n:
+            raise ValueError(
+                f"field {field} needs {ln} bytes, {n - pos} left in the"
+                " message"
+            )
+        yield field, wt, data[pos:end]
+        pos = end
 
 
 def _to_i64(v: int) -> int:
