@@ -205,17 +205,24 @@ def test_bigram_indexkey_count_join_matches_string_joins(spark):
 
 def test_bigram_sql_in_list_matches_isin_semantics(spark):
     """The single-string SQL IN list (one py4j call) must select the
-    same rows as Column.isin over the same values, including quote- and
-    backslash-bearing tokens."""
+    same rows as Column.isin over the same values, including quote-,
+    backslash- and dollar-bearing tokens, under either string-literal
+    dialect."""
     from victoriametrics_spark.operators.text import _sql_in_list
 
-    rows = [("a",), ("o'x",), ("b\\c",), ("plain",), ("miss",), (None,)]
+    rows = [("a",), ("o'x",), ("b\\c",), ("plain",), ("${x}",), ("miss",), (None,)]
     df = spark.createDataFrame(rows, "t string")
-    vals = ["o'x", "b\\c", "plain", "zz"]
-    got = df.filter(F.expr(f"t IN ({_sql_in_list(vals)})"))
-    ref = df.filter(F.col("t").isin(vals))
-    _same_rows(got, ref)
-    assert got.count() == 3
+    vals = ["o'x", "b\\c", "plain", "${x}", "zz"]
+    conf = "spark.sql.parser.escapedStringLiterals"
+    try:
+        for escaped_literals in ("false", "true"):
+            spark.conf.set(conf, escaped_literals)
+            got = df.filter(F.expr(f"t IN ({_sql_in_list(vals)})"))
+            ref = df.filter(F.col("t").isin(vals))
+            _same_rows(got, ref)
+            assert got.count() == 4, escaped_literals
+    finally:
+        spark.conf.unset(conf)
 
 
 def test_boilerplate_xxhash_key_matches_md5_key(spark):

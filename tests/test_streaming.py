@@ -353,6 +353,35 @@ def test_streamaggr_structured_streaming(spark, sa_samples, tmp_path):
     assert got[("m:100s_by_job_count_series", 200_000)] == 2.0
 
 
+def test_streamaggr_stream_groups_on_the_canonical_key(spark, tmp_path):
+    """``aggregate_stream`` keys its groups like ``aggregate_batch``:
+    ``{a="1", b=""}`` and ``{a="1"}`` are one group, labels come back
+    sorted by name with no empty values."""
+    rows = [
+        ("m", {"z": "2", "a": "1", "b": ""}, 10_000, 1.0, False),
+        ("m", {"a": "1", "z": "2"}, 20_000, 2.0, False),
+    ]
+    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
+    cfg = StreamAggrConfig(interval_ms=100_000, outputs=["sum_samples"])
+    batch = aggregate_batch(df, cfg).collect()
+    src = str(tmp_path / "stream_src")
+    df.write.parquet(src)
+    sdf = spark.readStream.schema(SAMPLE_SCHEMA).parquet(src)
+    q = (
+        aggregate_stream(sdf, cfg).writeStream.format("memory")
+        .queryName("sa_key_test")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    stream = spark.sql("select * from sa_key_test").collect()
+    for out in (batch, stream):
+        assert [(list(r["labels"].items()), r["value"]) for r in out] == [
+            ([("a", "1"), ("z", "2")], 3.0)
+        ]
+
+
 # ---------------------------------------------------------------- round 3:
 # remaining ingestion dialects
 from victoriametrics_spark.streaming.parsers import (  # noqa: E402

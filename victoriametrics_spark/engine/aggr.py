@@ -3,6 +3,12 @@ vendor/.../metricsql/aggr.go:7-45, executed per grid timestamp within
 ``by/without`` label groups as Catalyst hash aggregations (Spark's
 partial/final agg is exactly VM's incremental path,
 app/vmselect/promql/aggr_incremental.go:18-168).
+
+Each group is keyed by ``__gkey``, the canonical string of its
+by/without label map (``schema.canonical_labels_str``). Aggregates group
+on that key alone and decode the output labels from it afterwards
+(``schema.labels_from_key``), so the aggregation buffers hold only
+mutable numeric state and Spark plans them as hash aggregates.
 """
 
 from __future__ import annotations
@@ -15,7 +21,7 @@ from pyspark.sql.window import Window
 
 from victoriametrics_spark.engine.evalcfg import EvalConfig
 from victoriametrics_spark.metricsql.ast import AggrFuncExpr, StringExpr
-from victoriametrics_spark.schema import canonical_labels_str, series_key
+from victoriametrics_spark.schema import canonical_labels_str, labels_from_key, series_key
 
 if TYPE_CHECKING:
     from victoriametrics_spark.engine.planner import Plan, Planner
@@ -157,9 +163,8 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
     # model. Without this, Spark's NaN propagation poisons sums and its
     # NaN-is-largest ordering corrupts max/rankings.
     df = df.filter(~F.isnan(F.col("value")))
-    glabels = group_labels_col(ae.modifier)
-    df = df.withColumn("__glabels", glabels).withColumn(
-        "__gkey", canonical_labels_str(F.col("__glabels"))
+    df = df.withColumn(
+        "__gkey", canonical_labels_str(group_labels_col(ae.modifier))
     )
 
     if ae.limit and ae.limit > 0:
@@ -174,10 +179,7 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
 
     if name in _SIMPLE and name not in ("mad", "any"):
         agg = _SIMPLE[name]()
-        out = (
-            df.groupBy("__gkey", "ts")
-            .agg(F.first("__glabels").alias("labels"), agg.cast("double").alias("value"))
-        )
+        out = df.groupBy("__gkey", "ts").agg(agg.cast("double").alias("value"))
         return _shape(out)
 
     if name == "any":
@@ -195,7 +197,6 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
         # median(|v - median(v)|) per group/ts, via sorted-array expression
         med = F.percentile(V(), F.lit(0.5))
         grouped = df.groupBy("__gkey", "ts").agg(
-            F.first("__glabels").alias("labels"),
             F.collect_list(V()).alias("__vals"),
             med.alias("__med"),
         )
@@ -221,13 +222,9 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
         if phi < 0 or phi > 1:
             # quantile.go: phi outside [0,1] → ∓Inf
             bound = float("-inf") if phi < 0 else float("inf")
-            out = df.groupBy("__gkey", "ts").agg(
-                F.first("__glabels").alias("labels"),
-                F.lit(bound).alias("value"),
-            )
+            out = df.groupBy("__gkey", "ts").agg(F.lit(bound).alias("value"))
             return _shape(out)
         out = df.groupBy("__gkey", "ts").agg(
-            F.first("__glabels").alias("labels"),
             F.percentile(V(), F.lit(phi)).cast("double").alias("value"),
         )
         return _shape(out)
@@ -254,7 +251,6 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
             return F.percentile(V(), F.lit(phi))
 
         grouped = df.groupBy("__gkey", "ts").agg(
-            F.first("__glabels").alias("labels"),
             *[
                 _phi_agg(phi).alias(f"__q{i}")
                 for i, phi in enumerate(phis)
@@ -270,14 +266,13 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
                 for i, phi in enumerate(phis)
             ]
         )
-        exploded = grouped.select(
-            "__gkey", "ts", "labels", F.explode(pairs).alias("__p")
-        )
+        exploded = grouped.select("__gkey", "ts", F.explode(pairs).alias("__p"))
         out = exploded.select(
-            "__gkey",
             "ts",
             F.map_concat(
-                F.map_filter(F.col("labels"), lambda k, v: k != F.lit(label)),
+                F.map_filter(
+                    labels_from_key(F.col("__gkey")), lambda k, v: k != F.lit(label)
+                ),
                 F.create_map(F.lit(label), F.col("__p.phi")),
             ).alias("labels"),
             F.col("__p.v").cast("double").alias("value"),
@@ -337,15 +332,13 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
             rem = (
                 rest.filter(~F.isnan(V()))
                 .groupBy("__gkey", "ts")
-                .agg(
-                    F.first("__glabels").alias("labels"),
-                    F.sum(V()).cast("double").alias("value"),
-                )
+                .agg(F.sum(V()).cast("double").alias("value"))
                 .withColumn(
                     "labels",
                     F.map_concat(
                         F.map_filter(
-                            F.col("labels"), lambda kk, vv: kk != F.lit(tag)
+                            labels_from_key(F.col("__gkey")),
+                            lambda kk, vv: kk != F.lit(tag),
                         ),
                         F.create_map(F.lit(tag), F.lit(tval)),
                     ),
@@ -471,13 +464,13 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
         out = (
             df.withColumn("__vstr", vstr)
             .groupBy("__gkey", "ts", "__vstr")
-            .agg(
-                F.first("__glabels").alias("__gl"),
-                F.count("*").cast("double").alias("value"),
-            )
+            .agg(F.count("*").cast("double").alias("value"))
             .select(
                 F.map_concat(
-                    F.map_filter(F.col("__gl"), lambda k, v: k != F.lit(label)),
+                    F.map_filter(
+                        labels_from_key(F.col("__gkey")),
+                        lambda k, v: k != F.lit(label),
+                    ),
                     F.create_map(F.lit(label), F.col("__vstr")),
                 ).alias("labels"),
                 F.col("ts"),
@@ -497,9 +490,14 @@ def plan_aggr(planner: "Planner", ae: AggrFuncExpr, cfg: EvalConfig) -> "Plan":
 
 
 def _shape(out: DataFrame) -> DataFrame:
-    # a __name__ entry in the group-label map (injected by
+    # group labels are decoded from the group key unless a branch built
+    # its own; a __name__ entry in the group-label map (injected by
     # group_labels_col for `by (__name__)`) becomes the output name
-    labels = F.col("labels")
+    labels = (
+        F.col("labels")
+        if "labels" in out.columns
+        else labels_from_key(F.col("__gkey"))
+    )
     name = F.coalesce(labels.getItem("__name__"), F.lit(""))
     clean = F.map_filter(labels, lambda k, v: k != F.lit("__name__"))
     return out.select(
@@ -536,14 +534,12 @@ def _vm_histogram(df: DataFrame) -> DataFrame:
     out = (
         pos.withColumn("__vmrange", vmrange)
         .groupBy("__gkey", "ts", "__vmrange")
-        .agg(
-            F.first("__glabels").alias("__gl"),
-            F.count("*").cast("double").alias("value"),
-        )
+        .agg(F.count("*").cast("double").alias("value"))
         .select(
             F.lit("").alias("name"),
             F.map_concat(
-                F.col("__gl"), F.create_map(F.lit("vmrange"), F.col("__vmrange"))
+                labels_from_key(F.col("__gkey")),
+                F.create_map(F.lit("vmrange"), F.col("__vmrange")),
             ).alias("labels"),
             F.col("ts"),
             F.col("value"),

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from victoriametrics_spark.engine.evalcfg import EvalConfig
 from victoriametrics_spark.metricsql.ast import BinaryOpExpr
-from victoriametrics_spark.schema import canonical_labels_str
+from victoriametrics_spark.schema import canonical_labels_str, labels_from_key
 
 if TYPE_CHECKING:
     from victoriametrics_spark.engine.planner import Plan, Planner
@@ -100,22 +100,6 @@ def match_key_col(group_modifier) -> Column:
             F.map_filter(labels, lambda k, v: ~k.isin(*keys)) if keys else labels
         )
     return canonical_labels_str(restricted)
-
-
-def result_labels_one_to_one(group_modifier) -> Column:
-    """One-to-one result labels: on() keeps only the on-labels; ignoring()
-    drops the ignored; default keeps all (name dropped separately)."""
-    labels = F.col("labels")
-    if group_modifier is None:
-        return labels
-    keys = [str(k) for k in group_modifier.args]
-    if group_modifier.op == "on":
-        if not keys:
-            return F.create_map().cast("map<string,string>")
-        return F.map_filter(labels, lambda k, v: k.isin(*keys))
-    if not keys:
-        return labels
-    return F.map_filter(labels, lambda k, v: ~k.isin(*keys))
 
 
 def plan_binop(planner: "Planner", be: BinaryOpExpr, cfg: EvalConfig) -> "Plan":
@@ -474,29 +458,29 @@ def _try_fused_same_source(planner, be: BinaryOpExpr, cfg: EvalConfig):
     pred_l = _label_membership_pred(me_l)
     pred_r = _label_membership_pred(me_r)
     agg = _FUSABLE_AGGRS[l.name]
-    df = df.withColumn("__glabels", group_labels_col(l.modifier)).withColumn(
-        "__gkey", canonical_labels_str(F.col("__glabels"))
+    df = df.withColumn(
+        "__gkey", canonical_labels_str(group_labels_col(l.modifier))
     )
     grouped = df.groupBy("__gkey", "ts").agg(
-        F.first("__glabels").alias("labels"),
         agg(F.when(pred_l, F.col("value"))).cast("double").alias("__l"),
         agg(F.when(pred_r, F.col("value"))).cast("double").alias("__r"),
     )
     value = ARITH_OPS[be.op](F.col("__l"), F.col("__r"))
+    labels = labels_from_key(F.col("__gkey"))
     # `by (__name__)` injects the metric name into the group labels
     # (aggr.group_labels_col); the unfused plan lifts it back into the
     # name column (aggr._shape) and the arith then resets it unless
     # keep_metric_names — mirror both steps here
     name_out = (
-        F.coalesce(F.col("labels")["__name__"], F.lit(""))
+        F.coalesce(labels["__name__"], F.lit(""))
         if be.keep_metric_names
         else F.lit("")
     )
     out = grouped.select(
         name_out.alias("name"),
-        F.map_filter(
-            F.col("labels"), lambda k, v: k != F.lit("__name__")
-        ).alias("labels"),
+        F.map_filter(labels, lambda k, v: k != F.lit("__name__")).alias(
+            "labels"
+        ),
         F.col("ts"),
         value.cast("double").alias("value"),
     )
@@ -538,11 +522,13 @@ def _plan_series_setop(
     # identity (not one fill row per cell missing from ALL of them).
     # Volume: per match key, |left series| x |right cells| candidates —
     # the same bound as a group_left join.
-    lser = l.groupBy(
-        "__mk",
-        F.col("name"),
-        canonical_labels_str(F.col("labels")).alias("__sk"),
-    ).agg(F.first("labels").alias("labels"))
+    lser = (
+        l.select(
+            "__mk", "name", canonical_labels_str(F.col("labels")).alias("__sk")
+        )
+        .distinct()
+        .withColumn("labels", labels_from_key(F.col("__sk")))
+    )
     # one fill value per (key, ts) cell — with several right series VM
     # takes whichever it iterates first; pick the canonically-first
     # series for determinism
@@ -788,12 +774,17 @@ def _fill_missing_with_scalar(planner, df: DataFrame, sc, cfg) -> DataFrame:
     """``q default N`` with scalar N: fill each series' missing grid points
     (binary_op.go:568-586)."""
     from victoriametrics_spark.engine.grid import grid_df
-    from victoriametrics_spark.schema import series_key
+    from victoriametrics_spark.schema import (
+        name_labels_from_series_key,
+        series_key,
+    )
 
     sk = series_key(F.col("name"), F.col("labels"))
-    # groupBy, not distinct — Spark forbids set ops on MAP columns
-    series = df.groupBy(sk.alias("__sk")).agg(
-        F.first("name").alias("name"), F.first("labels").alias("labels")
+    name, labels = name_labels_from_series_key(F.col("__sk"))
+    series = (
+        df.select(sk.alias("__sk"))
+        .distinct()
+        .select("__sk", name.alias("name"), labels.alias("labels"))
     )
     g = grid_df(planner.spark, cfg)
     dense = series.crossJoin(g)

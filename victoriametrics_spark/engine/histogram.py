@@ -21,7 +21,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from victoriametrics_spark.schema import canonical_labels_str
+from victoriametrics_spark.schema import (
+    canonical_labels_str,
+    labels_from_key,
+    name_labels_from_series_key,
+    series_key,
+)
 
 INF = float("inf")
 
@@ -58,18 +63,16 @@ def _bucket_arrays(df: DataFrame) -> DataFrame:
     d = (
         df.withColumn("__le", le)
         .filter(F.col("__le").isNotNull())
-        .withColumn("__hlabels", _drop_keys(F.col("labels"), ["le"]))
-        .withColumn("__hkey", canonical_labels_str(F.col("__hlabels")))
+        .withColumn(
+            "__hkey", canonical_labels_str(_drop_keys(F.col("labels"), ["le"]))
+        )
     )
-    merged = d.groupBy("__hkey", "ts", "__le").agg(
-        F.first("__hlabels").alias("labels"), F.sum("value").alias("v")
-    )
+    merged = d.groupBy("__hkey", "ts", "__le").agg(F.sum("value").alias("v"))
     return merged.groupBy("__hkey", "ts").agg(
-        F.first("labels").alias("labels"),
         F.array_sort(
             F.collect_list(F.struct(F.col("__le").alias("le"), F.col("v").alias("v")))
         ).alias("b"),
-    )
+    ).withColumn("labels", labels_from_key(F.col("__hkey")))
 
 
 def _fixed_values(b: Column) -> Column:
@@ -343,23 +346,16 @@ def vmrange_to_le(df: DataFrame) -> DataFrame:
         .withColumn("__start_str", start_str)
         .withColumn("__end_str", end_str)
         .filter(F.col("__start").isNotNull() & F.col("__end").isNotNull())
-        .withColumn("__glabels", _drop_keys(labels, ["le", "vmrange"]))
         .withColumn(
             "__gkey",
-            F.concat(
-                F.col("name"), F.lit("\x00"), canonical_labels_str(F.col("__glabels"))
-            ),
+            series_key(F.col("name"), _drop_keys(labels, ["le", "vmrange"])),
         )
     )
 
     # bucket identity & liveness (all-zero series are skipped wholesale)
     buckets = d.groupBy(
         "__gkey", "__start", "__end", "__start_str", "__end_str"
-    ).agg(
-        F.first("name").alias("name"),
-        F.first("__glabels").alias("glabels"),
-        F.max("value").alias("__maxv"),
-    )
+    ).agg(F.max("value").alias("__maxv"))
     live = buckets.filter(F.col("__maxv") > 0)
     # duplicate bucket ends keep only the first sorted entry
     # (vmrangeBucketsToLE uniqTs: the later same-end series is merged
@@ -374,8 +370,6 @@ def vmrange_to_le(df: DataFrame) -> DataFrame:
 
     # per group: ordered bucket list → le boundary list (gap fill + +Inf)
     meta = live.groupBy("__gkey").agg(
-        F.first("name").alias("name"),
-        F.first("glabels").alias("glabels"),
         F.array_sort(
             F.collect_list(
                 F.struct(
@@ -433,13 +427,9 @@ def vmrange_to_le(df: DataFrame) -> DataFrame:
     )
     ledf = (
         meta.withColumn("__les", with_inf)
-        .select(
-            "__gkey", "name", "glabels", F.explode("__les").alias("e")
-        )
+        .select("__gkey", F.explode("__les").alias("e"))
         .select(
             "__gkey",
-            "name",
-            "glabels",
             F.col("e.le").alias("__le"),
             F.col("e.le_str").alias("__le_str"),
         )
@@ -467,16 +457,17 @@ def vmrange_to_le(df: DataFrame) -> DataFrame:
             & (F.col("__vend") <= F.col("__le")),
             "left",
         )
-        .groupBy("__gkey", "name", "glabels", "ts", "__le", "__le_str")
+        .groupBy("__gkey", "ts", "__le", "__le_str")
         .agg(
             F.sum(
                 F.when(F.col("__vval") > 0, F.col("__vval")).otherwise(F.lit(0.0))
             ).alias("__cum")
         )
     )
+    name, glabels = name_labels_from_series_key(F.col("__gkey"))
     converted = cum.select(
-        F.col("name"),
-        _with_label(F.col("glabels"), "le", F.col("__le_str")).alias("labels"),
+        name.alias("name"),
+        _with_label(glabels, "le", F.col("__le_str")).alias("labels"),
         F.col("ts"),
         F.coalesce(F.col("__cum"), F.lit(0.0)).alias("value"),
     )
@@ -502,12 +493,7 @@ def buckets_limit(df: DataFrame, limit: int) -> DataFrame:
         tss.withColumn("__le", le)
         .filter(F.col("__le").isNotNull())
         .withColumn(
-            "__hkey",
-            F.concat(
-                F.col("name"),
-                F.lit("\x00"),
-                canonical_labels_str(_drop_keys(F.col("labels"), ["le"])),
-            ),
+            "__hkey", series_key(F.col("name"), _drop_keys(F.col("labels"), ["le"]))
         )
     )
     sums = d.groupBy("__hkey", "__le").agg(F.sum("value").alias("__s"))

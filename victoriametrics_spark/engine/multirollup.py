@@ -29,6 +29,7 @@ from victoriametrics_spark.metricsql.ast import (
     RollupExpr,
     StringExpr,
 )
+from victoriametrics_spark.schema import name_labels_from_series_key
 
 if TYPE_CHECKING:
     from victoriametrics_spark.engine.planner import Plan, Planner
@@ -70,6 +71,10 @@ def _resolve(
     return re_, raw, window_ms, offset_ms, window_col
 
 
+def _series_labels() -> Column:
+    return name_labels_from_series_key(F.col("__series_key"))[1]
+
+
 def _emit_tagged(
     grouped: DataFrame,
     cfg: EvalConfig,
@@ -87,9 +92,10 @@ def _emit_tagged(
         ]
     )
     gts = F.lit(cfg.start) + F.col("i") * F.lit(cfg.step)
+    name, labels = name_labels_from_series_key(F.col("__series_key"))
     out = grouped.select(
-        (F.col("name") if keep_name else F.lit("")).alias("name"),
-        F.col("labels"),
+        (name if keep_name else F.lit("")).alias("name"),
+        labels.alias("labels"),
         gts.alias("ts"),
         F.explode(arr).alias("__e"),
     ).select(
@@ -156,8 +162,6 @@ def plan_multi_rollup(planner: "Planner", fe: FuncExpr, cfg: EvalConfig) -> Data
         )
         pair = F.struct(F.col("ts").alias("t"), F.col("value").alias("v"))
         grouped = prepared.groupBy("__series_key", "i").agg(
-            F.first("name").alias("name"),
-            F.first("labels").alias("labels"),
             F.min(pair).alias("__first"),
             F.max(pair).alias("__last"),
             F.min("value").alias("__low"),
@@ -177,8 +181,6 @@ def plan_multi_rollup(planner: "Planner", fe: FuncExpr, cfg: EvalConfig) -> Data
         )
         prepared = prepared.withColumn("__x", _x_column(name))
         grouped = prepared.groupBy("__series_key", "i").agg(
-            F.first("name").alias("name"),
-            F.first("labels").alias("labels"),
             F.min("__x").alias("__min"),
             F.max("__x").alias("__max"),
             F.avg("__x").alias("__avg"),
@@ -217,8 +219,6 @@ def plan_quantiles_over_time(
     )
     prepared = prepare_rollup_input(raw, cfg, window_ms, offset_ms)
     grouped = prepared.groupBy("__series_key", "i").agg(
-        F.first("name").alias("name"),
-        F.first("labels").alias("labels"),
         *[
             F.percentile(F.col("value"), F.lit(p)).alias(f"__q{j}")
             for j, p in enumerate(phis)
@@ -249,14 +249,11 @@ def plan_count_values_over_time(
     out = (
         prepared.withColumn("__vstr", vstr)
         .groupBy("__series_key", "i", "__vstr")
-        .agg(
-            F.first("labels").alias("labels"),
-            F.count("*").cast("double").alias("value"),
-        )
+        .agg(F.count("*").cast("double").alias("value"))
         .select(
             F.lit("").alias("name"),
             F.map_concat(
-                F.map_filter(F.col("labels"), lambda k, _: k != F.lit(label)),
+                F.map_filter(_series_labels(), lambda k, _: k != F.lit(label)),
                 F.create_map(F.lit(label), F.col("__vstr")),
             ).alias("labels"),
             gts.alias("ts"),
@@ -289,14 +286,11 @@ def plan_histogram_over_time(
     out = (
         pos.withColumn("__vmrange", vmrange)
         .groupBy("__series_key", "i", "__vmrange")
-        .agg(
-            F.first("labels").alias("labels"),
-            F.count("*").cast("double").alias("value"),
-        )
+        .agg(F.count("*").cast("double").alias("value"))
         .select(
             F.lit("").alias("name"),
             F.map_concat(
-                F.map_filter(F.col("labels"), lambda k, _: k != F.lit("vmrange")),
+                F.map_filter(_series_labels(), lambda k, _: k != F.lit("vmrange")),
                 F.create_map(F.lit("vmrange"), F.col("__vmrange")),
             ).alias("labels"),
             gts.alias("ts"),
@@ -366,8 +360,6 @@ def plan_holt_winters(planner: "Planner", fe: FuncExpr, cfg: EvalConfig) -> Data
     )
     pair = F.struct(F.col("ts").alias("t"), F.col("value").alias("v"))
     grouped = prepared.groupBy("__series_key", "i").agg(
-        F.first("name").alias("name"),
-        F.first("labels").alias("labels"),
         F.array_sort(F.collect_list(pair)).alias("__sp"),
         F.min_by(F.col("prev_value"), F.col("ts")).alias("__pv"),
     )
@@ -402,9 +394,10 @@ def plan_holt_winters(planner: "Planner", fe: FuncExpr, cfg: EvalConfig) -> Data
             ),
         )
         value = F.when(F.size(seq) == 0, s_init).otherwise(folded["s"])
+    name, labels = name_labels_from_series_key(F.col("__series_key"))
     out = grouped.select(
-        F.col("name"),  # holt_winters keeps the metric name
-        F.col("labels"),
+        name.alias("name"),  # holt_winters keeps the metric name
+        labels.alias("labels"),
         gts.alias("ts"),
         value.cast("double").alias("value"),
     )
@@ -424,13 +417,17 @@ def plan_stale_samples_over_time(
     out = (
         prepared.groupBy("__series_key", "i")
         .agg(
-            F.first("labels").alias("labels"),
             F.sum(
                 F.when(F.coalesce(F.col("is_stale"), F.lit(False)), 1).otherwise(0)
             )
             .cast("double")
             .alias("value"),
         )
-        .select(F.lit("").alias("name"), "labels", gts.alias("ts"), "value")
+        .select(
+            F.lit("").alias("name"),
+            _series_labels().alias("labels"),
+            gts.alias("ts"),
+            "value",
+        )
     )
     return out

@@ -62,6 +62,7 @@ from victoriametrics_spark.metricsql.ast import (
     StringExpr,
 )
 from victoriametrics_spark.metricsql.funcs import is_rollup_func
+from victoriametrics_spark.schema import name_labels_from_series_key
 
 SERIES_COLS = ["name", "labels", "ts", "value"]
 
@@ -482,18 +483,19 @@ class Planner:
                 & (F.col("ts") <= F.col("__b.hi"))
             )
             grouped = rows.groupBy("__series_key", "__b.out_ts").agg(
-                F.first("name").alias("name"),
-                F.first("labels").alias("labels"),
-                *spec.aggs(args_),
+                *spec.aggs(args_)
             )
             keep = (
                 spec.keep_name
                 or fe.keep_metric_names
                 or a.keep_metric_names
             )
+            name_c, labels_c = name_labels_from_series_key(
+                F.col("__series_key")
+            )
             out = grouped.select(
-                (F.col("name") if keep else F.lit("")).alias("name"),
-                F.col("labels"),
+                (name_c if keep else F.lit("")).alias("name"),
+                labels_c.alias("labels"),
                 F.col("out_ts").alias("ts"),
                 spec.post(args_).cast("double").alias("value"),
             )
@@ -719,14 +721,7 @@ class Planner:
                 offset_ms,
                 spec.prefix.contribs(a),
                 needs_prev=spec.needs_prev,
-            ).select(
-                "__series_key",
-                "name",
-                "labels",
-                "i",
-                "gts",
-                *spec.prefix.finalize(a),
-            )
+            ).select("__series_key", "i", "gts", *spec.prefix.finalize(a))
         elif (
             spec.two_level is not None
             and rem == 0
@@ -740,18 +735,12 @@ class Planner:
                 needs_prev=spec.needs_prev, needs_fwd=spec.needs_fwd,
             )
             partials = bucketed.groupBy("__series_key", "b").agg(
-                F.first("name").alias("name"),
-                F.first("labels").alias("labels"),
-                *spec.two_level.partials(a),
+                *spec.two_level.partials(a)
             )
             exploded = explode_bucket_partials(partials, cfg, k)
             grouped = (
                 exploded.groupBy("__series_key", "i")
-                .agg(
-                    F.first("name").alias("name"),
-                    F.first("labels").alias("labels"),
-                    *spec.two_level.merges(a),
-                )
+                .agg(*spec.two_level.merges(a))
                 .withColumn(
                     "gts", F.lit(cfg.start) + F.col("i") * F.lit(cfg.step)
                 )
@@ -764,11 +753,7 @@ class Planner:
             )
             grouped = (
                 prepared.groupBy("__series_key", "i")
-                .agg(
-                    F.first("name").alias("name"),
-                    F.first("labels").alias("labels"),
-                    *spec.aggs(a),
-                )
+                .agg(*spec.aggs(a))
                 .withColumn(
                     "gts", F.lit(cfg.start) + F.col("i") * F.lit(cfg.step)
                 )
@@ -788,9 +773,10 @@ class Planner:
             # metric name is erased — observable user behavior
             # (apptest issues/9762 expects Metric {})
             keep = False
+        name_c, labels_c = name_labels_from_series_key(F.col("__series_key"))
         out = grouped.select(
-            (F.col("name") if keep else F.lit("")).alias("name"),
-            F.col("labels"),
+            (name_c if keep else F.lit("")).alias("name"),
+            labels_c.alias("labels"),
             F.col("gts").alias("ts"),
             spec.post(a).cast("double").alias("value"),
         )

@@ -51,7 +51,7 @@ def prefix_rollup(
     ``contribs`` is a list of (alias, per-sample Column); the result has,
     for every alias, ``__d_<alias>`` = SUM of the contribution over the
     lookbehind window with exact SUM-NULL semantics, plus grouping cols
-    (__series_key, name, labels, i, gts).
+    (__series_key, i, gts); callers decode name and labels from the key.
     """
     start, end, step = cfg.start, cfg.end, cfg.step
     npts = cfg.num_points
@@ -63,7 +63,9 @@ def prefix_rollup(
         df = df.withColumn(
             "__series_key", series_key(F.col("name"), F.col("labels"))
         )
-    df = df.withColumn("__sts", F.col("ts") + F.lit(offset_ms))
+    df = df.drop("name", "labels").withColumn(
+        "__sts", F.col("ts") + F.lit(offset_ms)
+    )
     # Range prune that preserves prev semantics: keep in-range samples
     # plus, per series, the single LAST sample at/before the cutoff — the
     # prev of the first in-range sample (VM's prevValue, rollup.go:780).
@@ -100,8 +102,6 @@ def prefix_rollup(
     # needs exactly one partitioning+sort of each series
     sample_rows = df.select(
         "__series_key",
-        "name",
-        "labels",
         F.col("ts"),
         F.col("value"),
         F.col("__sts").alias("__pos"),
@@ -110,18 +110,13 @@ def prefix_rollup(
         F.lit(0).alias("__kind"),  # unused for samples
     )
 
-    # one (name, labels) representative per series for the marker rows
-    series = df.groupBy("__series_key").agg(
-        F.first("name").alias("name"), F.first("labels").alias("labels")
-    )
+    series = df.select("__series_key").distinct()
     grid = series.sparkSession.range(npts).select(F.col("id").alias("i"))
     markers = (
         series.crossJoin(grid)
         .withColumn("gts", F.lit(start) + F.col("i") * F.lit(step))
         .select(
             "__series_key",
-            "name",
-            "labels",
             F.lit(None).cast("long").alias("ts"),
             F.lit(None).cast("double").alias("value"),
             F.explode(
@@ -139,8 +134,6 @@ def prefix_rollup(
         )
         .select(
             "__series_key",
-            "name",
-            "labels",
             "ts",
             "value",
             F.col("__mk.pos").alias("__pos"),
@@ -188,9 +181,7 @@ def prefix_rollup(
             .over(wcum)
             .alias(f"__n_{alias}")
         )
-    scanned = unioned.select(
-        "__series_key", "name", "labels", "i", "__m", "__kind", *cum_cols
-    )
+    scanned = unioned.select("__series_key", "i", "__m", "__kind", *cum_cols)
 
     marks = scanned.filter(F.col("__m") == 1)
     diff_aggs = []
@@ -204,11 +195,7 @@ def prefix_rollup(
         diff_aggs.append(
             F.when(nn > 0, end_c - start_c).alias(f"__d_{alias}")
         )
-    out = marks.groupBy("__series_key", "i").agg(
-        F.first("name").alias("name"),
-        F.first("labels").alias("labels"),
-        *diff_aggs,
-    )
+    out = marks.groupBy("__series_key", "i").agg(*diff_aggs)
     return out.withColumn(
         "gts", F.lit(start) + F.col("i") * F.lit(step)
     )

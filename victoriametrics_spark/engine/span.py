@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from victoriametrics_spark.engine.evalcfg import EvalConfig
-from victoriametrics_spark.schema import series_key
+from victoriametrics_spark.schema import name_labels_from_series_key, series_key
 
 # Functions evaluated by this module (each mirrors the named Go func).
 SPAN_ROLLUPS = {
@@ -438,7 +438,7 @@ def span_rollup(
     # and py4j round-trip, and for a plan this size that construction +
     # project-collapsing overhead dominated the per-query driver cost.
     needs_lead = name in ("increase", "delta")
-    base = ["__series_key", "name", "labels", "__sts", "value"]
+    base = ["__series_key", "__sts", "value"]
     null_d = F.lit(None).cast("double")
     # second running sum for the eligibility family: in-window counts /
     # sums read as single subtractions of two readings (bit-reproducible
@@ -606,8 +606,6 @@ def span_rollup(
     )
     role = F.col("__r.role")
     stats = exploded.groupBy("__series_key", "i").agg(
-        F.first("name").alias("name"),
-        F.first("labels").alias("labels"),
         F.first("__v0").alias("__v0"),
         F.first("__mpi").alias("__mpi"),
         F.first("__win").alias("__win"),
@@ -622,8 +620,6 @@ def span_rollup(
     )
     stats = stats.select(
         "__series_key",
-        "name",
-        "labels",
         "i",
         gts_col.alias("gts"),
         n.alias("n"),
@@ -664,9 +660,10 @@ def span_rollup(
         ).alias("el"),
     )
 
+    name_c, labels_c = name_labels_from_series_key(F.col("__series_key"))
     out = stats.select(
-        (F.col("name") if keep_name else F.lit("")).alias("name"),
-        F.col("labels"),
+        (name_c if keep_name else F.lit("")).alias("name"),
+        labels_c.alias("labels"),
         F.col("gts").alias("ts"),
         _value_expr(name).cast("double").alias("value"),
     )

@@ -19,7 +19,11 @@ from victoriametrics_spark.metricsql.ast import (
     MetricExpr,
     StringExpr,
 )
-from victoriametrics_spark.schema import canonical_labels_str, series_key
+from victoriametrics_spark.schema import (
+    canonical_labels_str,
+    name_labels_from_series_key,
+    series_key,
+)
 
 if TYPE_CHECKING:
     from victoriametrics_spark.engine.planner import Plan, Planner
@@ -638,8 +642,10 @@ def plan_transform(planner: "Planner", fe: FuncExpr, cfg: EvalConfig) -> "Plan":
         if isinstance(inner, FuncExpr) and inner.name.startswith("sort_by_label"):
             desc = inner.name.endswith("_desc")
             numeric = "_numeric" in inner.name
-            keys = df.groupBy(key.alias("__sk")).agg(
-                F.first("labels").alias("__labels")
+            keys = (
+                df.select(key.alias("__sk"))
+                .distinct()
+                .select("__sk", _identity()[1].alias("__labels"))
             )
             for k in _str_args(inner):
                 col = F.coalesce(F.col("__labels").getItem(k), F.lit(""))
@@ -799,6 +805,18 @@ def _pointwise(planner, fe, cfg, fn, keep_name: bool = False):
     return out.filter(F.col("value").isNotNull() & ~F.isnan("value"))
 
 
+def _identity() -> tuple[Column, Column]:
+    """``(name, labels)`` decoded from the ``__sk`` series-key column."""
+    name, labels = name_labels_from_series_key(F.col("__sk"))
+    return name.alias("name"), labels.alias("labels")
+
+
+def _series(df: DataFrame) -> DataFrame:
+    """One row per series: ``__sk`` plus its decoded name and labels."""
+    sk = series_key(F.col("name"), F.col("labels"))
+    return df.select(sk.alias("__sk")).distinct().select("__sk", *_identity())
+
+
 def _series_window(df: DataFrame):
     key = series_key(F.col("name"), F.col("labels"))
     return df.withColumn("__sk", key), Window.partitionBy("__sk").orderBy("ts")
@@ -815,18 +833,15 @@ def _series_fold(planner, df: DataFrame, step_fn, extra_acc: list,
     grouped = (
         df.withColumn("__sk", series_key(F.col("name"), F.col("labels")))
         .groupBy("__sk")
-        .agg(
-            F.first("name").alias("name"),
-            F.first("labels").alias("labels"),
-            F.array_sort(F.collect_list(pair)).alias("__sp"),
-        )
+        .agg(F.array_sort(F.collect_list(pair)).alias("__sp"))
     )
     out_t = "array<struct<t:bigint,v:double>>"
     acc0 = F.struct(*extra_acc, F.array().cast(out_t).alias("out"))
     folded = F.aggregate(F.col("__sp"), acc0, step_fn)
+    name, labels = _identity()
     out = grouped.select(
-        (F.col("name") if keep_name else F.lit("")).alias("name"),
-        F.col("labels"),
+        name if keep_name else F.lit("").alias("name"),
+        labels,
         F.explode(folded["out"]).alias("__e"),
     ).select(
         "name",
@@ -843,14 +858,9 @@ def _gap_fill(planner, fe, cfg, name):
     from victoriametrics_spark.engine.grid import grid_df
 
     df = planner.materialize(planner.plan(fe.args[0], cfg), cfg)
-    # densify: every (series, grid ts) cell (groupBy, not distinct —
-    # Spark forbids set ops on MAP columns)
+    # densify: every (series, grid ts) cell
     sk = series_key(F.col("name"), F.col("labels"))
-    series = df.groupBy(sk.alias("__sk")).agg(
-        F.first("name").alias("name"), F.first("labels").alias("labels")
-    )
-    g = grid_df(planner.spark, cfg)
-    dense = series.crossJoin(g)
+    dense = _series(df).crossJoin(grid_df(planner.spark, cfg))
     vals = df.select(sk.alias("__sk"), F.col("ts"), F.col("value"))
     dense = dense.join(vals, ["__sk", "ts"], "left")
     w = Window.partitionBy("__sk").orderBy("ts")
@@ -893,10 +903,7 @@ def _dense_series_grid(planner, df, cfg):
     from victoriametrics_spark.engine.grid import grid_df
 
     sk = series_key(F.col("name"), F.col("labels"))
-    series = df.groupBy(sk.alias("__sk")).agg(
-        F.first("name").alias("name"), F.first("labels").alias("labels")
-    )
-    dense = series.crossJoin(grid_df(planner.spark, cfg))
+    dense = _series(df).crossJoin(grid_df(planner.spark, cfg))
     vals = df.select(sk.alias("__sk"), F.col("ts"), F.col("value"))
     return dense.join(vals, ["__sk", "ts"], "left")
 
@@ -961,8 +968,6 @@ def _range_fn(planner, fe, cfg, agg_name):
         sk = series_key(F.col("name"), F.col("labels"))
         if agg_name == "mad":
             per = df.groupBy(sk.alias("__sk")).agg(
-                F.first("name").alias("name"),
-                F.first("labels").alias("labels"),
                 F.collect_list("value").alias("__vals"),
                 F.percentile(F.col("value"), F.lit(0.5)).alias("__med"),
             )
@@ -972,15 +977,9 @@ def _range_fn(planner, fe, cfg, agg_name):
             n = F.size(devs)
             lo = F.try_element_at(devs, ((n + 1) / 2).cast("int"))
             hi = F.try_element_at(devs, ((n + 2) / 2).cast("int"))
-            per = per.select(
-                "__sk", "name", "labels", ((lo + hi) / 2.0).alias("__stat")
-            )
+            per = per.select("__sk", ((lo + hi) / 2.0).alias("__stat"))
         else:
-            per = df.groupBy(sk.alias("__sk")).agg(
-                F.first("name").alias("name"),
-                F.first("labels").alias("labels"),
-                stat.alias("__stat"),
-            )
+            per = df.groupBy(sk.alias("__sk")).agg(stat.alias("__stat"))
         from victoriametrics_spark.engine.grid import grid_df
 
         # metric-name survival follows the reference implementations, not
@@ -991,9 +990,10 @@ def _range_fn(planner, fe, cfg, agg_name):
         # only rewrite values and KEEP the name
         keep = agg_name in ("first", "last", "quantile", "stdvar",
                             "stddev", "mad", "median")
+        name, labels = _identity()
         out = per.crossJoin(grid_df(planner.spark, cfg)).select(
-            (F.col("name") if keep else F.lit("")).alias("name"),
-            F.col("labels"),
+            name if keep else F.lit("").alias("name"),
+            labels,
             F.col("ts"),
             F.col("__stat").cast("double").alias("value"),
         )
@@ -1025,15 +1025,12 @@ def _range_fn(planner, fe, cfg, agg_name):
 
         sk = series_key(F.col("name"), F.col("labels"))
         per = df.groupBy(sk.alias("__sk")).agg(
-            F.first("name").alias("name"),
-            F.first("labels").alias("labels"),
             F.regr_slope(F.col("value"), F.col("ts") / 1000.0).alias("__k"),
             F.regr_intercept(F.col("value"), F.col("ts") / 1000.0).alias("__b"),
             F.avg("value").alias("__mean"),
         )
         fitted = per.crossJoin(grid_df(planner.spark, cfg)).select(
-            F.col("name"),
-            F.col("labels"),
+            *_identity(),
             F.col("ts"),
             (
                 F.coalesce(F.col("__b"), F.col("__mean"))
@@ -1363,14 +1360,10 @@ def _label_fn(planner, fe, cfg, name):
         # labels grouped and compared against the series count), folded
         # into one broadcast array row and map_filter'ed out; no
         # planning-time Spark jobs (round-2 advisor finding)
-        sk = series_key(F.col("name"), F.col("labels"))
         # __name__ participates in commonality like any label
         # (transformDropCommonLabels iterates MetricGroup too) — model it
         # as a pseudo-entry so a name shared by every series is dropped
-        series = df.groupBy(sk.alias("__sk")).agg(
-            F.first("labels").alias("labels"),
-            F.first("name").alias("name"),
-        )
+        series = _series(df)
         kv = series.select(
             F.explode(
                 F.map_concat(

@@ -556,8 +556,14 @@ def gopher_quality_filter(
 
 
 def _sql_str(s: str) -> str:
-    """SQL single-quoted string literal (backslash-escape dialect)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """SQL string literal that reads the same under either string-literal
+    dialect (``spark.sql.parser.escapedStringLiterals``): a value holding
+    a backslash, a quote or a ``$`` (variable substitution) goes in as a
+    UTF-8 binary literal cast back to a string, which constant folding
+    turns into the same literal."""
+    if any(c in s for c in "\\'$"):
+        return f"CAST(X'{s.encode().hex()}' AS STRING)"
+    return f"'{s}'"
 
 
 def _sql_in_list(values: list[str]) -> str:

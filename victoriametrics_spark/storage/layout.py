@@ -437,9 +437,14 @@ def _compact_full(
     downsample_rules: "list | None" = None,
     now_ms: "int | None" = None,
 ) -> None:
-    """Whole-table rewrite (rebucketing / explicit ``full=True``)."""
+    """Whole-table rewrite (rebucketing / explicit ``full=True``). It
+    recomputes ``__series_key``, which re-keys a table written before the
+    key escaped separator bytes (see ``schema.py``)."""
     tmp = f"{table}__compacting"
-    src = _apply_tombstones(spark, spark.table(table), table).drop("date")
+    src = (
+        _apply_tombstones(spark, spark.table(table), table)
+        .drop("date", "__series_key")
+    )
     if downsample_rules and now_ms is not None:
         from victoriametrics_spark.storage.downsample import downsample
 

@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from victoriametrics_spark.schema import canonical_labels_str, series_key
+from victoriametrics_spark.schema import canonical_labels_str, labels_from_key, series_key
 
 STATELESS_OUTPUTS = {
     "sum_samples",
@@ -177,23 +177,23 @@ def aggregate_batch(df: DataFrame, cfg: StreamAggrConfig) -> DataFrame:
     iv = cfg.interval_ms
     d = (
         df.withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-        .withColumn("__glabels", _group_labels(cfg))
-        .withColumn("__gkey", canonical_labels_str(F.col("__glabels")))
+        .withColumn("__gkey", canonical_labels_str(_group_labels(cfg)))
         .withColumn("__w", F.col("ts") - F.col("ts") % F.lit(iv))
     )
     flush_ts = (F.col("__w") + F.lit(iv)).alias("ts")
+    glabels = labels_from_key(F.col("__gkey"))
     outs: list[DataFrame] = []
 
     stateless = [o for o in cfg.outputs if o in STATELESS_OUTPUTS]
     if stateless:
-        grouped = d.groupBy("name", "__glabels", "__w").agg(
+        grouped = d.groupBy("name", "__gkey", "__w").agg(
             *[_stateless_agg(o).alias(f"__o_{o}") for o in stateless]
         )
         for o in stateless:
             outs.append(
                 grouped.select(
                     _out_name(cfg, o).alias("name"),
-                    F.col("__glabels").alias("labels"),
+                    glabels.alias("labels"),
                     flush_ts,
                     F.col(f"__o_{o}").cast("double").alias("value"),
                 ).filter(F.col("value").isNotNull() & ~F.isnan("value"))
@@ -201,7 +201,7 @@ def aggregate_batch(df: DataFrame, cfg: StreamAggrConfig) -> DataFrame:
 
     if "quantiles" in cfg.outputs:
         qs = cfg.quantiles or [0.5]
-        grouped = d.groupBy("name", "__glabels", "__w").agg(
+        grouped = d.groupBy("name", "__gkey", "__w").agg(
             *[
                 F.percentile(F.col("value"), F.lit(p)).alias(f"__q{i}")
                 for i, p in enumerate(qs)
@@ -212,9 +212,7 @@ def aggregate_batch(df: DataFrame, cfg: StreamAggrConfig) -> DataFrame:
                 grouped.select(
                     _out_name(cfg, "quantiles").alias("name"),
                     F.map_concat(
-                        F.map_filter(
-                            F.col("__glabels"), lambda k, v: k != F.lit("quantile")
-                        ),
+                        F.map_filter(glabels, lambda k, v: k != F.lit("quantile")),
                         F.create_map(F.lit("quantile"), F.lit(f"{p:g}")),
                     ).alias("labels"),
                     flush_ts,
@@ -233,12 +231,12 @@ def aggregate_batch(df: DataFrame, cfg: StreamAggrConfig) -> DataFrame:
         )
         outs.append(
             pos.withColumn("__vmrange", vmrange)
-            .groupBy("name", "__glabels", "__w", "__vmrange")
+            .groupBy("name", "__gkey", "__w", "__vmrange")
             .agg(F.count("*").cast("double").alias("value"))
             .select(
                 _out_name(cfg, "histogram_bucket").alias("name"),
                 F.map_concat(
-                    F.col("__glabels"),
+                    glabels,
                     F.create_map(F.lit("vmrange"), F.col("__vmrange")),
                 ).alias("labels"),
                 flush_ts,
@@ -294,7 +292,6 @@ def aggregate_batch(df: DataFrame, cfg: StreamAggrConfig) -> DataFrame:
             ),
         )
         per_window = dd.groupBy("name", "__gkey", "__w").agg(
-            F.first("__glabels").alias("__glabels"),
             F.sum("__pos_dv").alias("__inc"),
             F.sum("__contrib_keep").alias("__inc_keep"),
             F.sum("value").alias("__ss"),
@@ -330,7 +327,7 @@ def aggregate_batch(df: DataFrame, cfg: StreamAggrConfig) -> DataFrame:
             outs.append(
                 per_window.select(
                     _out_name(cfg, o).alias("name"),
-                    F.col("__glabels").alias("labels"),
+                    glabels.alias("labels"),
                     flush_ts,
                     val.cast("double").alias("value"),
                 ).filter(F.col("value").isNotNull() & ~F.isnan("value"))
@@ -365,10 +362,10 @@ def aggregate_stream(
         sdf.withColumn("__event_time", tcol)
         .withWatermark("__event_time", f"{max(allowed_lateness_ms, 0)} milliseconds")
         .withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-        .withColumn("__glabels", _group_labels(cfg))
+        .withColumn("__gkey", canonical_labels_str(_group_labels(cfg)))
     )
     win = F.window("__event_time", f"{cfg.interval_ms} milliseconds")
-    grouped = d.groupBy(F.col("name"), F.col("__glabels"), win.alias("__win")).agg(
+    grouped = d.groupBy(F.col("name"), F.col("__gkey"), win.alias("__win")).agg(
         *[_stateless_agg(o, streaming=True).alias(f"__o_{o}") for o in stateless]
     )
     outs = []
@@ -376,7 +373,7 @@ def aggregate_stream(
         outs.append(
             grouped.select(
                 _out_name(cfg, o).alias("name"),
-                F.col("__glabels").alias("labels"),
+                labels_from_key(F.col("__gkey")).alias("labels"),
                 F.unix_millis(F.col("__win.end")).alias("ts"),
                 F.col(f"__o_{o}").cast("double").alias("value"),
             )
@@ -446,9 +443,8 @@ def aggregate_stream_pandas_state(
             "__event_time", f"{iv + max(allowed_lateness_ms, 0)} milliseconds"
         )
         .withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-        .withColumn("__glabels", _group_labels(cfg))
-        .withColumn("__gkey", canonical_labels_str(F.col("__glabels")))
-        .withColumn("__labels_json", F.to_json(F.col("__glabels")))
+        .withColumn("__gkey", canonical_labels_str(_group_labels(cfg)))
+        .withColumn("__labels_json", F.to_json(labels_from_key(F.col("__gkey"))))
         .select(
             "name", "__gkey", "__sk", F.col(ts_col).alias("ts"),
             "value", F.col("__labels_json").alias("labels_json"),
